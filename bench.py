@@ -225,8 +225,8 @@ def bench_queries(spark, sf_dir: str) -> dict[str, dict]:
             FOCAL_NR * FOCAL_NC,
         ),
         # lexical-retrieval class: BM25 top-10 for 8 x 50-term queries over
-        # a 100k-doc synthetic corpus (dl computed before explode; no
-        # corpus-joins-corpus anywhere)
+        # an N_BM25-doc synthetic corpus, 50k docs by default (dl computed
+        # before explode; no corpus-joins-corpus anywhere)
         "bm25_topk": (
             lambda: _count(
                 bm25_topk(

@@ -3,10 +3,11 @@
 Re-expresses the query semantics of smarsGroup/geo-epic (reference at
 /root/reference, citations as ``path:line`` in docstrings) as idiomatic Spark:
 DataFrame/SQL expressions for joins, windows and aggregates; Arrow-batched
-pandas UDFs only where built-ins cannot express the semantics (prepared-geometry
-point-in-polygon refine, image codecs). Cell indexing, k-ring expansion and
-bbox covering are pure Column arithmetic (JVM-side, whole-stage-codegen
-friendly) — no Python in the hot path.
+pandas UDFs only where built-ins cannot express the semantics (image codecs,
+vector kernels such as minhash signatures and PQ encode). Cell indexing,
+k-ring expansion, bbox covering and the point-in-polygon refine are pure
+Column arithmetic (JVM-side, whole-stage-codegen friendly) — no Python in
+the hot path.
 """
 
 __version__ = "0.1.0"

@@ -88,8 +88,9 @@ def parse_wkt_polygon(wkt: str) -> tuple[np.ndarray, np.ndarray]:
 
 
 def haversine_km(lon1, lat1, lon2, lat2) -> np.ndarray:
-    """Great-circle distance in km (numpy mirror of the Column version in
-    functions/scalars.py; reference haversine path `utils/raster_utils.py:196`)."""
+    """Great-circle distance in km (numpy mirror of the Column version
+    ``operators.spatial._haversine_km``; reference haversine path
+    `utils/raster_utils.py:196`)."""
     r = 6371.0088
     lon1, lat1, lon2, lat2 = (np.radians(np.asarray(a, dtype=np.float64)) for a in (lon1, lat1, lon2, lat2))
     dlon = lon2 - lon1

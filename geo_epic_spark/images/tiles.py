@@ -10,7 +10,7 @@ shuffle, fully codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geo_epic_spark import cells
@@ -61,15 +61,3 @@ def tile_center(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "cx", (F.col("lon_min") + F.col("lon_max")) / 2
     ).withColumn("cy", (F.col("lat_min") + F.col("lat_max")) / 2)
-
-
-def tile_cell(df: DataFrame, res: float, out: str = "cell_id") -> Column:
-    """Cell of the tile center (the equi-join key of the flagship path)."""
-    return df.withColumn(
-        out,
-        cells.cell_id(
-            (F.col("lon_min") + F.col("lon_max")) / 2,
-            (F.col("lat_min") + F.col("lat_max")) / 2,
-            res,
-        ),
-    )

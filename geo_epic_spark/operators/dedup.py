@@ -15,6 +15,9 @@ buckets (boilerplate text clusters are the dense-cell analog).
 from __future__ import annotations
 
 import warnings
+from collections.abc import Sequence
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -41,6 +44,35 @@ def exact_dedup(df: DataFrame, text: str = "text", key: str = "doc_id") -> DataF
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+def _bucket_self_join(
+    df: DataFrame, key: str, buckets: Sequence[str], carry: Sequence[str] = ()
+) -> DataFrame:
+    """Candidate pairs of a bucketed self-join: every (a, b) with
+    ``a.key < b.key`` that agree on all ``buckets`` columns, as
+    (id_a, id_b, then ``{c}_a``, ``{c}_b`` for each ``carry`` column c).
+    A pair sharing several buckets appears once per shared bucket; callers
+    dedup or count the pairs themselves.
+
+    Both sides are by construction the same size, so a broadcast plan is
+    categorically wrong — yet Catalyst picks one whenever the lineage's
+    size ESTIMATE is small (e.g. a synthetic spark.range corpus estimates
+    ~8 bytes/row, so a 19M-row banded frame "fits" the 64 MB threshold),
+    and then every action stalls ~10 s while the driver single-threadedly
+    builds a 19M-entry hash relation (the serial term that capped 4->16
+    scaling efficiency at 0.6). At 10^12 rows the same misestimate would be
+    a driver OOM. SHUFFLE_HASH pins a shuffled join with a per-partition
+    build (no sort needed — bucket hashes have no order), and AQE can still
+    split skewed partitions. tests/test_plans.py pins the shuffled join."""
+    a, b = df.alias("a"), df.hint("shuffle_hash").alias("b")
+    on = reduce(and_, [F.col(f"a.{c}") == F.col(f"b.{c}") for c in buckets]
+                + [F.col(f"a.{key}") < F.col(f"b.{key}")])
+    return a.join(b, on).select(
+        F.col(f"a.{key}").alias("id_a"),
+        F.col(f"b.{key}").alias("id_b"),
+        *[F.col(f"{side}.{c}").alias(f"{c}_{side}") for c in carry for side in "ab"],
     )
 
 
@@ -74,16 +106,9 @@ def ngram_jaccard_pairs(
     """
     sh = shingles(df.select(key, text), text, n).select(key, _shingle_id().alias("__h"))
     sizes = sh.groupBy(key).agg(F.count(F.lit(1)).alias("sz"))
-    # same-size self-join: pin a shuffled per-partition-build join — a small
-    # lineage size ESTIMATE (synthetic ranges, fresh UDF output) otherwise
-    # lets Catalyst broadcast the whole exploded shingle table, a serial
-    # driver-side hash build here and an OOM at corpus scale (see the
-    # minhash band join note in _verify_candidates)
-    a = sh.alias("a")
-    b = sh.hint("shuffle_hash").alias("b")
     shared = (
-        a.join(b, (F.col("a.__h") == F.col("b.__h")) & (F.col(f"a.{key}") < F.col(f"b.{key}")))
-        .groupBy(F.col(f"a.{key}").alias("id_a"), F.col(f"b.{key}").alias("id_b"))
+        _bucket_self_join(sh, key, ["__h"])
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     out = (
@@ -96,14 +121,6 @@ def ngram_jaccard_pairs(
     return out
 
 
-def _shingle_hash() -> F.Column:
-    """Shingle hash folded into [0, P), P = 2^31-1 — the minhash permutation
-    domain (a*h + b with a, h < 2^31 stays inside signed int64). Identity
-    comparisons (set membership, join keys) use the raw 64-bit hash instead:
-    see ``_shingle_id``."""
-    return F.pmod(F.xxhash64(F.col("shingle")), F.lit(_P))
-
-
 def _shingle_id() -> F.Column:
     """Full 64-bit shingle identity hash for set-intersection verify and
     equi-join keys (collision ~2^-64/pair; the 31-bit permutation fold would
@@ -112,9 +129,8 @@ def _shingle_id() -> F.Column:
 
 
 def _perm_constants(num_hashes: int) -> tuple[list[int], list[int]]:
-    """Deterministic universal-hash (a_j, b_j) pairs shared by
-    ``minhash_signatures`` and ``minhash_lsh_pairs`` (single source so the
-    two paths can never drift)."""
+    """Deterministic universal-hash (a_j, b_j) pairs of the minhash
+    permutations ``(a_j * h + b_j) mod P`` used by ``minhash_lsh_pairs``."""
     rng_a = [((2 * j + 1) * 0x9E3779B97F4A7C15) % _P or 1 for j in range(num_hashes)]
     rng_b = [(j * 0xC2B2AE3D27D4EB4F + 0x165667B19E3779F9) % _P for j in range(num_hashes)]
     return rng_a, rng_b
@@ -133,25 +149,6 @@ def bands_for_threshold(threshold: float, num_hashes: int = 64, target_recall: f
     return num_hashes
 
 
-def minhash_signatures(
-    df: DataFrame, num_hashes: int = 64, text: str = "text", key: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """MinHash signature per doc: sig[j] = min over shingles of
-    (a_j * h + b_j) mod P. One groupBy over the exploded shingles computes all
-    permutations at once (array_agg-free: min of transform)."""
-    rng_a, rng_b = _perm_constants(num_hashes)
-    sh = shingles(df.select(key, text), text, n).withColumn("__h", _shingle_hash())
-    # per (doc, j): min((a_j*h + b_j) mod P)  — computed as num_hashes agg cols
-    aggs = [
-        F.min(
-            F.pmod(F.col("__h") * F.lit(rng_a[j]) + F.lit(rng_b[j]), F.lit(_P))
-        ).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    sig = sh.groupBy(key).agg(*aggs)
-    return sig.select(key, F.array(*[f"mh{j}" for j in range(num_hashes)]).alias("signature"))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float = 0.5,
@@ -161,7 +158,6 @@ def minhash_lsh_pairs(
     key: str = "doc_id",
     n: int = 3,
     partitions: int | None = None,
-    signature_path: str = "arrow",
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, exact-verified.
 
@@ -179,84 +175,22 @@ def minhash_lsh_pairs(
     heavy stage on one task); leave None when the table is already properly
     partitioned — at scale the extra full-text shuffle is pure cost.
 
-    ``signature_path``: 'arrow' (default) computes each doc's shingle-id set
-    and all 64 permutation minima in a map-only stage (JVM gram/hash
-    Columns + one vectorized numpy pass per Arrow batch) — ZERO shuffle
-    before the band join, vs the 'agg' path's explode → 64-min groupBy
-    (map-side-combined, but still a per-doc shuffle). Both paths produce
-    bit-identical minima (shared ``_perm_constants`` + the same pmod
-    arithmetic), so the banded candidate sets — and therefore the verified
-    output — are identical (pinned in test_dedup_text); measured 1.8 s vs
-    2.7 s at the sf0.1 bench config, and the gap is structural at scale.
+    Each doc's shingle-id set and all ``num_hashes`` permutation minima are
+    computed in one map-only stage (JVM gram/hash Columns + one vectorized
+    numpy pass per Arrow batch), so nothing shuffles before the band join.
     """
     if bands is None:
         bands = bands_for_threshold(threshold, num_hashes)
     if partitions:
         df = df.repartition(partitions)
-    rows = num_hashes // bands
-    rng_a, rng_b = _perm_constants(num_hashes)
-    if signature_path == "arrow":
-        per_doc, banded = _arrow_per_doc_bands(
-            df, key, text, n, num_hashes, bands, rows
-        )
-        return _verify_candidates(per_doc, banded, key, threshold, ids_col="__ids")
-    if signature_path != "agg":
-        raise ValueError(f"minhash_lsh_pairs: unknown signature_path {signature_path!r}")
-    sh = (
-        shingles(df.select(key, text), text, n)
-        .withColumn("__id", _shingle_id())
-        .withColumn("__h", F.pmod(F.col("__id"), F.lit(_P)))
-    )
-    # ONE pass over the exploded shingles computes the 64 permutation minima
-    # AND the hashed shingle set used by the exact verify (full 64-bit ids —
-    # the 31-bit permutation fold would birthday-collide inside large docs
-    # and skew the verified Jaccard). The per-doc aggregate feeds three
-    # branches (signatures, verify side a, verify side b); Catalyst's column
-    # pruning specializes each branch's partial aggregate, so ReuseExchange
-    # can NOT dedupe them (measured 2.8x slower without sharing). We share
-    # via localCheckpoint rather than persist(): checkpoint blocks are
-    # lifecycle-managed by the ContextCleaner — freed when the returned
-    # DataFrame is garbage-collected — so repeated calls in a long session
-    # don't leak cache entries (round-1 advisor finding). At cluster scale
-    # prefer a reliable checkpoint dir or a persisted signature table;
-    # per-doc payload is key + 64 longs + hash set (~KB/doc).
-    per_doc = sh.groupBy(key).agg(
-        F.collect_set("__id").alias("__sh"),
-        *[
-            F.min(
-                F.pmod(F.col("__h") * F.lit(rng_a[j]) + F.lit(rng_b[j]), F.lit(_P))
-            ).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ],
-    ).localCheckpoint(eager=False)
-    # band hash straight off the agg columns: variadic xxhash64 over the
-    # band's row minima — no signature array, no string concat/casts (the
-    # old array-index + concat_ws tree tripled plan-analysis + codegen time,
-    # which dominates at small corpus sizes)
-    banded = per_doc.select(
-        key,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh{bi * rows + r}") for r in range(rows)]
-                        ).alias("bhash"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bh"),
-    ).select(key, "bh.band", "bh.bhash")
-    return _verify_candidates(per_doc, banded, key, threshold, ids_col="__sh")
+    per_doc, banded = _arrow_per_doc_bands(df, key, text, n, num_hashes, bands)
+    return _verify_candidates(per_doc, banded, key, threshold)
 
 
 def _arrow_per_doc_bands(
-    df: DataFrame, key: str, text: str, n: int,
-    num_hashes: int, bands: int, rows: int,
+    df: DataFrame, key: str, text: str, n: int, num_hashes: int, bands: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Map-only per-doc stage of the 'arrow' signature path: word-gram
+    """Map-only per-doc stage of ``minhash_lsh_pairs``: word-gram
     shingle ids (JVM Columns, identical construction to ``shingles()`` +
     ``_shingle_id``) and the banded minhash bucket hashes (one vectorized
     numpy pass per Arrow batch). No shuffle anywhere in this stage."""
@@ -264,6 +198,7 @@ def _arrow_per_doc_bands(
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+    rows = num_hashes // bands
     rng_a, rng_b = _perm_constants(num_hashes)
     a_np = np.array(rng_a, dtype=np.int64)
     b_np = np.array(rng_b, dtype=np.int64)
@@ -286,20 +221,17 @@ def _arrow_per_doc_bands(
     # band bucket = FNV-1a-style mix of the band's row minima. The bucket
     # hash only has to be deterministic and collision-sparse (spurious
     # collisions are killed by the exact verify; equal minima tuples always
-    # produce equal buckets, so recall is exactly the agg path's).
+    # produce equal buckets, so recall is exactly that of banding on the
+    # minima tuples themselves).
     fnv_off = np.int64(-3750763034362895579)  # 0xcbf29ce484222325
     fnv_prime = np.int64(1099511628211)
 
-    # whole-batch vectorization (r4): the first cut of this kernel looped
-    # per DOCUMENT — ~70 tiny numpy calls per doc (including a 64-step
-    # scalar FNV loop), i.e. row-at-a-time Python in disguise; the profile
-    # showed the signature stage at ~80% of the whole minhash job and
-    # Python-interpreter-bound. Now every batch does ONE flat pass: ids
+    # whole-batch vectorization: every batch does ONE flat pass — ids
     # concatenated, permutations applied in cache-sized column chunks, and
     # the per-doc minima taken with a segment-min (minimum.reduceat over the
-    # doc offsets). Same int64 arithmetic, same mod/overflow semantics —
-    # bit-identical minima and band hashes (parity vs the 'agg' path stays
-    # pinned in test_dedup_text).
+    # doc offsets) — never a per-document Python loop. The minima equal a
+    # plain numpy (a_j * h + b_j) mod P reference (pinned in
+    # test_dedup_text).
     _PERM_CHUNK = 16  # (n_ids x chunk) temp ~50 MB at the 10k-row batch default
 
     def sig_fn(batches):
@@ -335,49 +267,31 @@ def _arrow_per_doc_bands(
                 {key: pdf[key], "__ids": ids_list, "__bands": list(acc)}
             )
 
+    # per_doc feeds three branches (the band join and both verify sides):
+    # localCheckpoint computes it once, and unlike persist() its blocks are
+    # freed by the ContextCleaner once the returned DataFrame is garbage-
+    # collected, so repeated calls in a long session leak no cache entries
     per_doc = d.mapInPandas(sig_fn, schema=out_schema).localCheckpoint(eager=False)
     banded = per_doc.select(key, F.posexplode("__bands").alias("band", "bhash"))
     return per_doc, banded
 
 
 def _verify_candidates(
-    per_doc: DataFrame, banded: DataFrame, key: str, threshold: float, ids_col: str
+    per_doc: DataFrame, banded: DataFrame, key: str, threshold: float
 ) -> DataFrame:
     """Band-collision candidate join + exact Jaccard verify over the hashed
-    shingle sets — shared tail of both signature paths. O(candidates), never
-    a full-corpus similarity join; hashed sets keep |set| exact up to 61-bit
-    collisions (~2^-61/pair) and shuffle 8-byte longs, never shingle text."""
-    # SELF-join of the banded table: both sides are by construction the same
-    # size (bands x corpus), so a broadcast plan is categorically wrong — yet
-    # Catalyst picks one whenever the lineage's size ESTIMATE is small (e.g.
-    # a synthetic spark.range corpus estimates ~8 bytes/row, so a 19M-row
-    # banded frame "fits" the 64 MB threshold), and then every action stalls
-    # ~10 s while the driver single-threadedly builds a 19M-entry hash
-    # relation (found via jstack during the 4->16 scaling hunt: the stall was
-    # the serial term capping efficiency at 0.6). At 10^12 docs the same
-    # misestimate would be a driver OOM. SHUFFLE_HASH pins a shuffled join
-    # with a per-partition build (no sort needed — bucket hashes have no
-    # order), and AQE can still split skewed partitions.
-    a = banded.alias("a")
-    b = banded.hint("shuffle_hash").alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
-        )
-        .select(F.col(f"a.{key}").alias("id_a"), F.col(f"b.{key}").alias("id_b"))
-        .distinct()
-    )
-    sh_sets = per_doc.select(key, ids_col)
+    shingle sets. O(candidates), never a full-corpus similarity join; hashed
+    sets keep |set| exact up to 61-bit collisions (~2^-61/pair) and shuffle
+    8-byte longs, never shingle text."""
+    cand = _bucket_self_join(banded, key, ["band", "bhash"]).distinct()
+    sh_sets = per_doc.select(key, "__ids")
     return (
         cand.join(
-            sh_sets.select(F.col(key).alias("id_a"), F.col(ids_col).alias("__sh_a")),
+            sh_sets.select(F.col(key).alias("id_a"), F.col("__ids").alias("__sh_a")),
             "id_a",
         )
         .join(
-            sh_sets.select(F.col(key).alias("id_b"), F.col(ids_col).alias("__sh_b")),
+            sh_sets.select(F.col(key).alias("id_b"), F.col("__ids").alias("__sh_b")),
             "id_b",
         )
         .withColumn("__inter", F.size(F.array_intersect("__sh_a", "__sh_b")))
@@ -457,24 +371,8 @@ def simhash_dup_pairs(
             )
         ).alias("b"),
     ).select(key, "simhash", "b.blk", "b.bval")
-    # same-size self-join: shuffled join pinned (see _verify_candidates note)
-    a, b = blocks.alias("a"), blocks.hint("shuffle_hash").alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
-        )
-        .select(
-            F.col(f"a.{key}").alias("id_a"),
-            F.col(f"b.{key}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    cand = _bucket_self_join(blocks, key, ["blk", "bval"], ["simhash"]).distinct()
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return cand.withColumn("hamming", ham).filter(F.col("hamming") <= max_hamming).select(
         "id_a", "id_b", "hamming"
     )
@@ -587,25 +485,15 @@ def hamming_near_dup_pairs(
         for ci, combo in enumerate(combinations(range(m), m - max_hamming))
     ])
     ex = df.select(F.col(key), h.alias("__h"), F.explode(keys).alias("bkey"))
-    # same-size self-join: shuffled join pinned (see _verify_candidates note)
-    a, b = ex.alias("a"), ex.hint("shuffle_hash").alias("b")
-    ham = F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h")))
+    ham = F.bit_count(F.col("__h_a").bitwiseXOR(F.col("__h_b")))
     # verify BEFORE distinct: the popcount filter runs inside the join's
     # output stream (codegen, no extra exchange) and discards the false
     # candidates — the distinct then shuffles only ~true-pairs x tables
     # rows, not the full candidate volume (measured 528M candidates -> 157s
     # distinct at 2M uniform hashes when ordered the other way)
     return (
-        a.join(
-            b,
-            (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
-        )
-        .select(
-            F.col(f"a.{key}").alias("id_a"),
-            F.col(f"b.{key}").alias("id_b"),
-            ham.alias("hamming"),
-        )
+        _bucket_self_join(ex, key, ["bkey"], ["__h"])
+        .select("id_a", "id_b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -725,25 +613,14 @@ def embedding_near_dup_pairs(
         key, vec,
         F.posexplode(band_buckets(F.col(vec))).alias("band", "bucket"),
     )
-    # same-size self-join: shuffled join pinned (see _verify_candidates note)
-    l, r = b.alias("l"), b.hint("shuffle_hash").alias("r")
-    cand = l.join(
-        r,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.bucket") == F.col("r.bucket"))
-        & (F.col(f"l.{key}") < F.col(f"r.{key}")),
-    ).select(
-        F.col(f"l.{key}").alias("id_a"),
-        F.col(f"r.{key}").alias("id_b"),
-        F.col(f"l.{vec}").alias("va"),
-        F.col(f"r.{vec}").alias("vb"),
-    )
+    cand = _bucket_self_join(b, key, ["band", "bucket"], [vec])
+    va, vb = f"{vec}_a", f"{vec}_b"
     if bands > 1:
         # a pair colliding in several bands appears once
         cand = cand.dropDuplicates(["id_a", "id_b"])
-    dot = F.aggregate(F.zip_with("va", "vb", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x)
-    na = F.sqrt(F.aggregate(F.transform("va", lambda a: a * a), F.lit(0.0), lambda s, x: s + x))
-    nb = F.sqrt(F.aggregate(F.transform("vb", lambda a: a * a), F.lit(0.0), lambda s, x: s + x))
+    dot = F.aggregate(F.zip_with(va, vb, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x)
+    na = F.sqrt(F.aggregate(F.transform(va, lambda a: a * a), F.lit(0.0), lambda s, x: s + x))
+    nb = F.sqrt(F.aggregate(F.transform(vb, lambda a: a * a), F.lit(0.0), lambda s, x: s + x))
     return (
         cand.withColumn("cosine", dot / (na * nb))
         .filter(F.col("cosine") >= threshold)
@@ -976,7 +853,7 @@ def semantic_dedup(
     )
     # same-size self-join on the coarse cluster id: pin a sort-merge join —
     # broadcast of the full normalized-vector table is the synthetic-lineage
-    # misestimate trap (see _verify_candidates), and SMJ keeps the dense-
+    # misestimate trap (see _bucket_self_join), and SMJ keeps the dense-
     # cluster skew AQE-splittable (the documented scale story for SemDeDup)
     a, b = ranked_n.alias("a"), ranked_n.hint("merge").alias("b")
     dot = F.aggregate(

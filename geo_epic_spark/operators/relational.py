@@ -6,10 +6,16 @@ projection, resume semi/anti filters.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from geo_epic_spark.functions.scalars import hydgrp_code
+
+def hydgrp_code(hydgrp: Column) -> Column:
+    """{A:1, B:2, C:3, D:4}, ''/unknown -> C=3 (`soil/sda.py:166-167`)."""
+    m = F.create_map(
+        F.lit("A"), F.lit(1), F.lit("B"), F.lit(2), F.lit("C"), F.lit(3), F.lit("D"), F.lit(4)
+    )
+    return F.coalesce(m[hydgrp], F.lit(3))
 
 
 def dominant_component(components: DataFrame) -> DataFrame:

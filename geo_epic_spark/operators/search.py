@@ -25,12 +25,6 @@ from pyspark.sql import functions as F
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
 
-def _tokens(col, alias: str):
-    return F.explode(
-        F.filter(F.split(F.lower(col), TOKEN_SPLIT_RE), lambda t: t != "")
-    ).alias(alias)
-
-
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,

@@ -9,8 +9,8 @@ intersection (`geoEpic/soil/sda.py:59-100`) and zonal statistics
      (geo_epic_spark.cells — JVM-side, codegen),
   2. a cell equi-join produces candidates (broadcast when one side is small;
      salting + AQE handle dense-cell skew),
-  3. an Arrow-batched pandas UDF refines candidates (exact ray-cast PIP) or a
-     window ranks candidates by distance (kNN).
+  3. a ray-cast fold inside the join condition refines candidates (exact
+     PIP, JVM codegen) or a window ranks candidates by distance (kNN).
 
 At 100 TB the expensive part is the shuffle of the big side, which happens
 exactly once on the cell key; the polygon/grid side is broadcast or
@@ -23,14 +23,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from geo_epic_spark import cells
-from geo_epic_spark.geometry import points_in_polygon
 
 
 # ---------------------------------------------------------------------------
-# point-in-polygon refine UDF (vectorized per polygon within each Arrow batch)
+# point-in-polygon refine (pure Column expression)
 # ---------------------------------------------------------------------------
 
 def pip_expr(px: Column, py: Column, xs: Column, ys: Column) -> Column:
@@ -61,23 +59,6 @@ def pip_expr(px: Column, py: Column, xs: Column, ys: Column) -> Column:
     # Wrapping in one atomic CASE that references px/py at the top level makes
     # the cross-side dependency visible and blocks the bogus pushdown.
     return F.when(px.isNotNull() & py.isNotNull(), fold).otherwise(F.lit(False))
-
-
-@F.pandas_udf(BooleanType())
-def _pip_udf(px: pd.Series, py: pd.Series, poly_id: pd.Series,
-             xs: pd.Series, ys: pd.Series) -> pd.Series:
-    out = np.zeros(len(px), dtype=bool)
-    pxv = px.to_numpy(dtype=np.float64)
-    pyv = py.to_numpy(dtype=np.float64)
-    # candidates arrive clustered by polygon (they come out of an equi-join on
-    # the polygon's covering cells), so group-by-polygon inside the batch keeps
-    # the ray-cast vectorized over many points per polygon.
-    for pid, idx in pd.Series(range(len(px))).groupby(poly_id.to_numpy()).groups.items():
-        ii = np.asarray(idx)
-        vx = np.asarray(xs.iloc[ii[0]], dtype=np.float64)
-        vy = np.asarray(ys.iloc[ii[0]], dtype=np.float64)
-        out[ii] = points_in_polygon(pxv[ii], pyv[ii], vx, vy)
-    return pd.Series(out)
 
 
 def _maybe_broadcast(df: DataFrame, do: bool) -> DataFrame:
@@ -113,7 +94,6 @@ def pip_join(
     how: str = "inner",
     broadcast_polys: bool = True,
     keep_poly_cols: list[str] | None = None,
-    refine: str = "expr",
 ) -> DataFrame:
     """Point-in-polygon assignment join.
 
@@ -125,11 +105,9 @@ def pip_join(
     Plan shape: polys → explode covering cells (bbox superset, pure arithmetic)
     → equi-join on cell (broadcast if small) → exact ray-cast refine. A
     (point, polygon) candidate appears exactly once because a point has
-    exactly one cell, so no post-join dedup is needed.
-
-    refine: 'expr' (default) keeps the ray-cast in whole-stage codegen via a
-    higher-order-function fold; 'udf' uses the Arrow-batched pandas UDF
-    (useful when swapping in native prepared geometries).
+    exactly one cell, so no post-join dedup is needed. The refine is
+    ``pip_expr``, a higher-order-function fold inside the join condition,
+    so it stays in whole-stage codegen.
     """
     keep = keep_poly_cols or []
     poly_cells = polys.select(
@@ -148,36 +126,24 @@ def pip_join(
     )
     pts = points.withColumn("__cell", cells.cell_id(F.col(lon), F.col(lat), res))
     build = _maybe_broadcast(poly_cells, broadcast_polys)
-    if refine == "expr":
-        # ray-cast refine INSIDE the join condition: the broadcast hash join
-        # evaluates it while probing, so non-matching candidates never
-        # materialize rows carrying the polygon vertex arrays (measurably
-        # less memory traffic than join-then-filter at high core counts).
-        # Conjunct order matters: codegen short-circuits left-to-right, so
-        # the bbox compares cull candidates before the HOF fold runs.
-        cond = (
-            (pts["__cell"] == poly_cells["__cell"])
-            & (pts[lon] >= poly_cells["__bx0"]) & (pts[lon] <= poly_cells["__bx1"])
-            & (pts[lat] >= poly_cells["__by0"]) & (pts[lat] <= poly_cells["__by1"])
-            & pip_expr(pts[lon], pts[lat], poly_cells["__xs"], poly_cells["__ys"])
-        )
-        hit = (
-            pts.join(build, cond, "inner")
-            .select(*[pts[c] for c in points.columns],
-                    poly_cells["__pid"].alias(poly_id),
-                    *[poly_cells[c] for c in keep])
-        )
-    else:
-        cand = pts.join(build, "__cell", "inner").filter(
-            (F.col(lon) >= F.col("__bx0")) & (F.col(lon) <= F.col("__bx1"))
-            & (F.col(lat) >= F.col("__by0")) & (F.col(lat) <= F.col("__by1"))
-        )
-        inside = _pip_udf(F.col(lon), F.col(lat), F.col("__pid"), F.col("__xs"), F.col("__ys"))
-        hit = (
-            cand.filter(inside)
-            .drop("__xs", "__ys", "__cell", "__bx0", "__bx1", "__by0", "__by1")
-            .withColumnRenamed("__pid", poly_id)
-        )
+    # ray-cast refine INSIDE the join condition: the broadcast hash join
+    # evaluates it while probing, so non-matching candidates never
+    # materialize rows carrying the polygon vertex arrays (measurably
+    # less memory traffic than join-then-filter at high core counts).
+    # Conjunct order matters: codegen short-circuits left-to-right, so
+    # the bbox compares cull candidates before the HOF fold runs.
+    cond = (
+        (pts["__cell"] == poly_cells["__cell"])
+        & (pts[lon] >= poly_cells["__bx0"]) & (pts[lon] <= poly_cells["__bx1"])
+        & (pts[lat] >= poly_cells["__by0"]) & (pts[lat] <= poly_cells["__by1"])
+        & pip_expr(pts[lon], pts[lat], poly_cells["__xs"], poly_cells["__ys"])
+    )
+    hit = (
+        pts.join(build, cond, "inner")
+        .select(*[pts[c] for c in points.columns],
+                poly_cells["__pid"].alias(poly_id),
+                *[poly_cells[c] for c in keep])
+    )
     if how == "inner":
         return hit
     if how == "left":

@@ -24,26 +24,6 @@ def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
-def has_shuffle(df: DataFrame) -> bool:
-    """True if the plan contains any Exchange (shuffle). AQE reuse/reads
-    still count — the bytes move."""
-    plan = formatted_plan(df)
-    return "Exchange" in plan and "BroadcastExchange" != _only_exchange_kind(plan)
-
-
-def _only_exchange_kind(plan: str) -> str | None:
-    kinds = set()
-    for line in plan.splitlines():
-        s = line.strip().lstrip("+-*( )0123456789")
-        if s.startswith("BroadcastExchange"):
-            kinds.add("BroadcastExchange")
-        elif s.startswith("Exchange") or s.startswith("ShuffleExchange"):
-            kinds.add("ShuffleExchange")
-    if kinds == {"BroadcastExchange"}:
-        return "BroadcastExchange"
-    return None if not kinds else "mixed"
-
-
 def shuffle_free(df: DataFrame) -> bool:
     """No rows cross the network except broadcast of the small side — the
     required shape for the flagship assignment join."""

@@ -31,13 +31,13 @@ filtering happens at the remote end (SURVEY §4 pushdown row).
 
 Transports are injectable callables ``request_dict -> response_str`` so the
 whole path is testable without network. :func:`http_transport` (urllib) is
-the production S6 transport — network-gated, never exercised in this
-sandbox; S7/S8 production transports would wrap ``xarray``/``earthengine``
-client sessions (import-gated factories below raise cleanly when the libs
-are absent). The synthetic transports serve deterministic integer-hash
-fixtures: the SDA one actually runs DuckDB *executor-side* over the same
-fixture SQL the correctness oracle uses, so any SQL the engine pushes down
-is genuinely executed by the "remote server" and the wire format, string
+the production S6 transport — network-gated, never exercised by the
+tests; S7/S8 have no production transport yet (one would wrap an
+``xarray`` or ``earthengine`` client session per executor). The synthetic
+transports serve deterministic integer-hash fixtures: the SDA one actually
+runs DuckDB *executor-side* over the same fixture SQL the correctness
+oracle uses, so any SQL the engine pushes down is genuinely executed by
+the "remote server" and the wire format, string
 round-trip and numeric coercion are all exercised for real.
 """
 
@@ -78,37 +78,6 @@ def http_transport(url: str, *, timeout: float = 60.0) -> Transport:
             return resp.read().decode("utf-8")
 
     return _send
-
-
-def xarray_transport(dataset_url: str) -> Transport:  # pragma: no cover
-    """Production S7 transport: one lazily-opened xarray/pydap session per
-    executor (the reference opens one per process, `nldas_ws.py:68-74`).
-    Import-gated — raises with a clear message when xarray is absent."""
-    try:
-        import xarray  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "xarray is required for the production OPeNDAP transport; "
-            "inject a synthetic transport for offline use"
-        ) from exc
-    raise NotImplementedError(
-        "wire xarray.open_dataset(dataset_url).isel(...) per request here"
-    )
-
-
-def ee_transport(project: str) -> Transport:  # pragma: no cover
-    """Production S8 transport: an earthengine session per executor
-    (`gee/initialize.py`). Import-gated."""
-    try:
-        import ee  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "earthengine-api is required for the production GEE transport; "
-            "inject a synthetic transport for offline use"
-        ) from exc
-    raise NotImplementedError(
-        "wire ee.data.computeFeatures per request here"
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -260,14 +260,15 @@ def interval_join_streams(
     watermark passes the row's own timestamp (its match window is
     ``[ts_l - lookback, ts_l]``, and any right row below the watermark is
     dropped as late). Under an availableNow replay the engine runs a final
-    no-data micro-batch with watermark = max(event time) - ``watermark``,
-    so the null-padded rows for the WATERMARK-CLOSED region (ts_left <
+    no-data micro-batch with watermark = min over the two sides of
+    max(event time) - ``watermark`` (Spark's default multiple-watermark
+    policy), so the null-padded rows for the WATERMARK-CLOSED region (ts_left <
     that final watermark) are all emitted, while unmatched left rows
     younger than the final watermark stay in state and are NOT emitted —
     deterministic given the input, but only the closed region is
     batch-equivalent. Oracle strategy (q_stream_join_outer): clamp both
-    engines to ts_left <= max_ts - watermark - margin and compare against
-    the batch LEFT join there.
+    engines to ts_left <= min(max_ts_left, max_ts_right) - watermark -
+    margin and compare against the batch LEFT join there.
     """
     from pyspark.sql import functions as F
 

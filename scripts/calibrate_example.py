@@ -75,7 +75,7 @@ def main() -> None:
 
     # one-at-a-time sensitivity around the optimum (the SALib-OAT analog):
     # d(SSE)/d(param) per unit step, read straight off the trace
-    def sens(key, grid, fixed_key, fixed_val):
+    def sens(key, fixed_key, fixed_val):
         pts = sorted(
             (r[key], r["sse"]) for r in trace if r[fixed_key] == fixed_val)
         return [
@@ -89,10 +89,8 @@ def main() -> None:
         and best["wet_threshold"] == TRUE_WET,
         "evaluations": len(trace),
         "trace": trace,
-        "sensitivity_ws_fill": sens("ws_fill", FILL_GRID,
-                                    "wet_threshold", TRUE_WET),
-        "sensitivity_wet_threshold": sens("wet_threshold", WET_GRID,
-                                          "ws_fill", TRUE_FILL),
+        "sensitivity_ws_fill": sens("ws_fill", "wet_threshold", TRUE_WET),
+        "sensitivity_wet_threshold": sens("wet_threshold", "ws_fill", TRUE_FILL),
     }
     print(json.dumps(out))
     assert out["recovered_truth"], "calibration failed to recover the truth"

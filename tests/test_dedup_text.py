@@ -547,16 +547,40 @@ def test_kmeans_distributed_objective_comparable_to_local_lloyd(spark):
 
 
 def test_minhash_signature_paths_identical(spark):
-    """'arrow' (map-only numpy signatures) and 'agg' (explode + 64-min
-    groupBy) must produce the identical verified pair set: the permutation
-    minima are bit-identical by construction, banding equality follows."""
+    """minhash_lsh_pairs equals a plain numpy minhash+LSH over the same
+    shingle ids: per-doc minima of (a_j * (id mod P) + b_j) mod P, bands as
+    exact tuples of ``num_hashes // bands`` minima, candidates = pairs that
+    share a band tuple, verified by exact Jaccard over the id sets."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    from geo_epic_spark.operators.dedup import _P, _perm_constants, shingles
+
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     kw = dict(threshold=0.125, num_hashes=64, bands=32, partitions=8)
-    arrow = {(r.id_a, r.id_b, round(r.jaccard, 9))
-             for r in minhash_lsh_pairs(docs, signature_path="arrow", **kw).collect()}
-    agg = {(r.id_a, r.id_b, round(r.jaccard, 9))
-           for r in minhash_lsh_pairs(docs, signature_path="agg", **kw).collect()}
-    assert arrow == agg and len(arrow) > 0
+    got = {(r.id_a, r.id_b, round(r.jaccard, 9))
+           for r in minhash_lsh_pairs(docs, **kw).collect()}
+
+    ids = defaultdict(set)
+    for r in shingles(docs.select("doc_id", "text")).select(
+            "doc_id", F.xxhash64("shingle").alias("id")).collect():
+        ids[r.doc_id].add(r.id)
+    a, b = (np.array(c, dtype=np.int64) for c in _perm_constants(kw["num_hashes"]))
+    rows = kw["num_hashes"] // kw["bands"]
+    buckets = defaultdict(list)
+    for d, s in ids.items():
+        h = np.array(sorted(s), dtype=np.int64) % _P
+        sig = ((h[:, None] * a[None, :] + b[None, :]) % _P).min(axis=0)
+        for band in range(kw["bands"]):
+            buckets[(band, tuple(sig[band * rows:(band + 1) * rows]))].append(d)
+    cand = {p for ds in buckets.values() for p in combinations(sorted(ds), 2)}
+    want = set()
+    for x, y in cand:
+        inter = len(ids[x] & ids[y])
+        jac = inter / (len(ids[x]) + len(ids[y]) - inter)
+        if jac >= kw["threshold"]:
+            want.add((x, y, round(jac, 9)))
+    assert got == want and len(want) > 0
 
 
 def test_documents_synth_corpus(spark):

@@ -4,10 +4,12 @@
 - nearest-grid join ring-1: broadcast join for the candidate stage
 - parquet scans: predicate pushdown + column pruning reach the scan
 - whole-stage codegen present on the hot path
+- dedup's bucketed self-joins: shuffled hash join, never broadcast
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from geo_epic_spark import synth
@@ -188,3 +190,48 @@ def test_topk_window_trims_map_side(spark):
     assert re.search(r"WindowGroupLimit .*row_number\(\), 5, Final", plan), plan
     pre, _, post = plan.partition("Exchange hashpartitioning(q_id")
     assert "Partial" in post and "Final" in pre, plan
+
+
+def _self_join_op(spark, op: str):
+    """One of dedup's five bucketed self-join operators over a tiny local
+    input — small enough that Catalyst would broadcast it unhinted."""
+    from geo_epic_spark.operators import dedup
+
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox {i % 3} jumps over the lazy dog")
+         for i in range(8)], "doc_id long, text string")
+    if op == "ngram":
+        return dedup.ngram_jaccard_pairs(docs, threshold=0.3)
+    if op == "minhash":
+        return dedup.minhash_lsh_pairs(docs, threshold=0.3, num_hashes=8, bands=4)
+    if op == "simhash":
+        return dedup.simhash_dup_pairs(docs, max_hamming=3)
+    if op == "hamming":
+        phashes = spark.range(64).select(
+            F.col("id").alias("img_id"), F.xxhash64("id").alias("h"))
+        return dedup.hamming_near_dup_pairs(
+            phashes, key="img_id", hash_col="h", max_hamming=4, n_blocks=6)
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 5), 1.0, float(i % 3)]) for i in range(16)],
+        "vec_id long, embedding array<double>")
+    return dedup.embedding_near_dup_pairs(vecs, threshold=0.9, planes=4, bands=2)
+
+
+@pytest.mark.parametrize("op", ["ngram", "minhash", "simhash", "hamming", "embedding"])
+def test_bucket_self_join_is_shuffled(spark, op):
+    """The pair-generating self-join (the join whose condition carries the
+    ``a.key < b.key`` predicate) must be a ShuffledHashJoin even when the
+    input is tiny: both sides are the same size, so a broadcast is a
+    serial driver-side build at scale. ngram and minhash also join the
+    pairs to per-doc lookups, which may broadcast; for the single-join
+    operators the whole plan must be broadcast-free."""
+    import re
+
+    out = _self_join_op(spark, op)
+    plan = formatted_plan(out)
+    joins = re.findall(
+        r"^\(\d+\) (\w*Join)\n(?:.+\n)*?Join condition: (.*)$", plan, re.M)
+    pair_joins = [kind for kind, cond in joins if " < " in cond]
+    assert pair_joins == ["ShuffledHashJoin"], plan
+    if len(joins) == 1:
+        assert not has_broadcast_hash_join(out), plan

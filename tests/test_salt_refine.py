@@ -1,23 +1,36 @@
-"""Salted-join equivalence (north rule: dense-cell skew) and pandas-UDF PIP
-refine parity with the JVM expression path."""
+"""Salted-join equivalence (north rule: dense-cell skew) and PIP refine
+parity with a brute-force numpy ray cast."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from geo_epic_spark import cells, synth
+from geo_epic_spark.geometry import points_in_polygon
 from geo_epic_spark.operators.spatial import (
     add_salt, pip_join, replicate_for_salt,
 )
 
 
 def test_udf_refine_matches_expr(spark):
+    """pip_join (cell cover, bbox cull, in-codegen ray-cast fold) returns
+    exactly the (point, polygon) pairs of a numpy ray cast of EVERY point
+    against EVERY polygon, multiplicity included."""
     imgs = synth.images_meta_df(spark, 20000).select("i", "cx", "cy")
     flds = synth.fields_df(spark, 300).select("poly_id", "xs", "ys")
-    a = pip_join(imgs, flds, res=0.05, lon="cx", lat="cy", refine="expr")
-    b = pip_join(imgs, flds, res=0.05, lon="cx", lat="cy", refine="udf")
-    assert a.count() == b.count()
-    assert a.select("i", "poly_id").exceptAll(b.select("i", "poly_id")).count() == 0
+    got = sorted(
+        (r.i, r.poly_id)
+        for r in pip_join(imgs, flds, res=0.05, lon="cx", lat="cy")
+        .select("i", "poly_id").collect()
+    )
+    pts = imgs.toPandas()
+    px, py, pid = pts["cx"].to_numpy(), pts["cy"].to_numpy(), pts["i"].to_numpy()
+    want = sorted(
+        (int(i), f.poly_id)
+        for f in flds.collect()
+        for i in pid[points_in_polygon(px, py, f.xs, f.ys)]
+    )
+    assert got == want and len(want) > 0
 
 
 def test_salted_cell_join_equals_unsalted(spark):
