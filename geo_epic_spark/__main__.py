@@ -175,7 +175,7 @@ def cmd_text_redact(a) -> int:
 
 def cmd_dedup_semantic(a) -> int:
     from geo_epic_spark.operators.dedup import semantic_dedup
-    from geo_epic_spark.operators.similarity import kmeans_centroids_distributed
+    from geo_epic_spark.operators.similarity import kmeans_centroids
 
     spark = _spark(a.cpus)
     import pyspark.sql.functions as F
@@ -183,7 +183,7 @@ def cmd_dedup_semantic(a) -> int:
     vecs = spark.read.parquet(a.vectors).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    cents = kmeans_centroids_distributed(vecs, c=a.clusters)
+    cents = kmeans_centroids(vecs, c=a.clusters, key="vec_id")
     out = semantic_dedup(vecs, cents, threshold=a.threshold, priority=a.priority)
     out.write.mode("overwrite").parquet(a.out)
     kept = spark.read.parquet(a.out).filter("keep").count()

@@ -26,18 +26,6 @@ from pyspark.sql.types import (
 from geo_epic_spark.images import codec
 from geo_epic_spark.synth import images_meta_df
 
-IMAGE_SCHEMA = StructType(
-    [
-        StructField("image_id", StringType()),
-        StructField("bytes", BinaryType()),
-        StructField("w", IntegerType()),
-        StructField("h", IntegerType()),
-        StructField("fmt", StringType()),
-        StructField("caption", StringType()),
-        StructField("phash", LongType()),
-    ]
-)
-
 
 def full_images_df(
     spark: SparkSession,

@@ -146,12 +146,9 @@ def cosine_topk_arrow(
             yield pd.concat(rows, ignore_index=True)
 
     survivors = vectors.select(key, vec).mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc(key))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", key, "rank", "cosine")
-    )
+    return _ranked_topk(
+        survivors, "q_id", k, [F.desc("cosine"), F.asc(key)],
+    ).select("q_id", key, "rank", "cosine")
 
 
 def kmeans_centroids(
@@ -161,38 +158,19 @@ def kmeans_centroids(
     iters: int = 3,
     key: str | None = None,
 ) -> list[list[float]]:
-    """Coarse k-means centroids — a thin alias for
-    ``kmeans_centroids_distributed`` (r3 VERDICT item 4: the old
-    driver-side sampled Lloyd ran a per-call ``count()`` + ``toPandas()``;
-    there is now exactly ONE trainer and it is the distributed
-    partial-stats pass, so every caller — ``build_ivf_index``, the CLI,
-    semantic-dedup seeding — gets full-table participation and zero
-    driver-side data pulls). ``key`` names a column to derive the
-    deterministic seeding order from; None seeds from a hash of the vector
-    itself, so no id column is required."""
-    return kmeans_centroids_distributed(vectors, c=c, vec=vec, key=key, iters=iters)
-
-
-def kmeans_centroids_distributed(
-    vectors: DataFrame,
-    c: int = 16,
-    vec: str = "embedding",
-    key: str | None = "vec_id",
-    iters: int = 3,
-) -> list[list[float]]:
-    """Distributed Lloyd iteration: the FULL table participates (not a
-    driver sample). Per iteration one mapInPandas pass emits per-partition
-    partial stats (centroid id, count, component sums) — c rows per
-    partition, so the driver merge touches c * num_partitions tiny rows;
-    the only driver-side math is that final weighted merge (r2 VERDICT
-    item 4). Partials carry their partition id and merge in sorted
-    (cid, pid) order, keeping the float accumulation order — and hence the
-    centroids — deterministic for a fixed input layout.
+    """Coarse k-means centroids by distributed Lloyd iteration: the FULL
+    table participates (not a driver sample). Per iteration one mapInPandas
+    pass emits per-partition partial stats (centroid id, count, component
+    sums) — c rows per partition, so the driver merge touches
+    c * num_partitions tiny rows and no table data is pulled to the driver.
+    Partials carry their partition id and merge in sorted (cid, pid) order,
+    keeping the float accumulation order — and hence the centroids —
+    deterministic for a fixed input layout.
 
     Seeding is the c rows with the smallest xxhash64(key): deterministic,
     uniform over the table, no full-table sort (a top-c via min-heap agg).
-    ``key=None`` hashes the vector column itself — callers without an id
-    column stay deterministic too.
+    ``key`` names an id column to hash; None hashes the vector column
+    itself, so callers without an id column stay deterministic too.
     """
     import pandas as pd
     from pyspark import TaskContext
@@ -265,16 +243,15 @@ def build_ivf_index(
     centroids: list[list[float]] | None = None,
 ) -> list[list[float]]:
     """Build and PERSIST the IVF index in one job: train coarse centroids
-    (distributed ``kmeans_centroids_distributed`` unless ``centroids`` is
+    (``kmeans_centroids`` seeded from ``key`` unless ``centroids`` is
     supplied — the train-offline contract), assign every vector, and write
     ``(key, vec, ivf_list)`` partitioned by ``ivf_list`` so a query's
     nprobe lists prune to exactly those partitions at scan time, plus the
     centroid table at ``path + '/_centroids'``. Returns the centroids.
 
-    This is the enforced once-per-corpus contract the per-call
-    ``kmeans_centroids`` docstring only promised (r2 VERDICT item 4):
-    callers probe via ``load_ivf_index`` with zero training actions."""
-    cents = centroids if centroids is not None else kmeans_centroids_distributed(
+    Training happens once per corpus here; callers probe via
+    ``load_ivf_index`` with zero training actions."""
+    cents = centroids if centroids is not None else kmeans_centroids(
         vectors, c=c, vec=vec, key=key, iters=iters
     )
     assigned = ivf_assign(vectors, cents, vec=vec)
@@ -572,10 +549,7 @@ def pq_topk_rerank(
     d2 = F.aggregate(
         F.zip_with(F.col(vec), F.col(q_vec), lambda a, b: (a - b) * (a - b)),
         F.lit(0.0), lambda s, x: s + x)
-    w = Window.partitionBy(q_key).orderBy(F.asc("l2_dist"), F.asc(key))
-    return (
-        rer.withColumn("l2_dist", d2)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_key, key, "rank", "l2_dist")
-    )
+    return _ranked_topk(
+        rer.withColumn("l2_dist", d2), q_key, k,
+        [F.asc("l2_dist"), F.asc(key)],
+    ).select(q_key, key, "rank", "l2_dist")

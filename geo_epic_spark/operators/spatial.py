@@ -222,6 +222,32 @@ def _haversine_km(px: Column, py: Column, gx: Column, gy: Column) -> Column:
     return F.lit(2) * r * F.asin(F.sqrt(h))
 
 
+def _nearest_k(cand: DataFrame, point_cols: list[str], key_cols: list[str],
+               k: int) -> DataFrame:
+    """Per-point top-k of the ``(__gid, __d)`` candidates, ties broken by
+    (distance, grid id): point columns + ``__gid``, ``__rk``, ``__d``."""
+    if k == 1:
+        # min_by gets map-side partial aggregation (one surviving row per
+        # point per input partition) instead of the full candidate shuffle a
+        # row_number window needs.
+        best = cand.groupBy(*[F.col(c) for c in point_cols]).agg(
+            F.min_by(
+                F.struct(F.col("__gid"), F.col("__d")),
+                F.struct(F.col("__d"), F.col("__gid")),
+            ).alias("__b")
+        )
+        return best.select(
+            *point_cols,
+            F.col("__b.__gid").alias("__gid"),
+            F.lit(1).alias("__rk"),
+            F.col("__b.__d").alias("__d"),
+        )
+    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
+        F.col("__d").asc(), F.col("__gid").asc()
+    )
+    return cand.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") <= k)
+
+
 def nearest_grid_join(
     points: DataFrame,
     grid: DataFrame,
@@ -235,8 +261,6 @@ def nearest_grid_join(
     grid_lon: str = "lon",
     grid_lat: str = "lat",
     max_ring: int = 8,
-    broadcast_grid: bool = True,
-    adaptive: bool = True,
     fallback: str = "brute",
 ) -> DataFrame:
     """Assign each point its k nearest grid rows (BallTree replacement,
@@ -247,8 +271,12 @@ def nearest_grid_join(
     point's cell at r = 1, 2, 4, ... A candidate set is provably complete when
     the k-th best distance is below ``r * res`` (any grid point outside the
     block is at least r*res degrees away in one axis); points that fail the
-    guarantee escalate to the next ring. Ties broken by (distance, grid_id)
-    — deterministic, unlike BallTree's insertion order.
+    guarantee escalate to the next ring. Each round is materialized with a
+    lazily-cleaned ``localCheckpoint`` and one ``isEmpty`` action decides
+    whether another ring is needed, so a dense lattice finishes in one round.
+    Rings 1 and 2 broadcast the k-ring-exploded grid; wider rings explode
+    the (few) pending points and broadcast the grid as is. Ties broken by
+    (distance, grid_id) — deterministic, unlike BallTree's insertion order.
 
     Output: point columns + ``grid_id``, ``nn_rank`` (1..k), ``nn_dist``
     (squared degrees for euclid_deg, km for haversine).
@@ -261,13 +289,15 @@ def nearest_grid_join(
     max_ring=1 for the covered-raster fast path where the fallback branch
     is provably empty and its plan weight is pure overhead).
     """
-    dist_fn = _dist2_deg if metric == "euclid_deg" else _haversine_km
+    dist = (_dist2_deg if metric == "euclid_deg" else _haversine_km)(
+        F.col(point_lon), F.col(point_lat), F.col("__glon"), F.col("__glat")
+    )
     # max_ring=1 is the "covered raster" fast path (J2 nearest-pixel
     # sampling): when the grid spans the probe area at spacing == res, the
     # 3x3 ring-1 block provably contains the nearest lattice point
-    # (|dx|,|dy| <= spacing/2 < res), so the guarantee check and the
-    # pending-work anti-join are skipped entirely — one broadcast join, one
-    # partial-aggregating min_by, no extra action.
+    # (|dx|,|dy| <= spacing/2 < res); with fallback='drop' the guarantee
+    # check and the pending-work anti-join are skipped entirely — one
+    # broadcast join, one partial top-1 aggregate, no extra action.
     # guarantee radius in the distance's own units
     def guard(r: int) -> Column:
         if metric == "euclid_deg":
@@ -299,6 +329,15 @@ def nearest_grid_join(
     # window/anti-join key: a unique point id keeps the shuffle key narrow;
     # falling back to all point columns is correct but wider.
     key_cols = [point_id] if point_id else point_cols
+
+    def project(df: DataFrame) -> DataFrame:
+        return df.select(
+            *point_cols,
+            F.col("__gid").alias(grid_id),
+            F.col("__rk").alias("nn_rank"),
+            F.col("__d").alias("nn_dist"),
+        )
+
     results: list[DataFrame] = []
     r = 1
     while True:
@@ -307,22 +346,18 @@ def nearest_grid_join(
         # explode the (broadcast) grid side, leaving the big point stream
         # un-multiplied; escalation rounds (few pending points) explode the
         # point side to avoid an 18M-row broadcast at large r.
-        if r <= 2 and broadcast_grid:
+        if r <= 2:
             g_r = F.broadcast(
                 g.withColumn("__cell", F.explode(cells.k_ring(F.col("__gcell"), r)))
             )
             probe = pending.withColumn("__cell", F.col("__pcell"))
         else:
-            g_r = _maybe_broadcast(
-                g.withColumn("__cell", F.col("__gcell")), broadcast_grid
-            )
+            g_r = F.broadcast(g.withColumn("__cell", F.col("__gcell")))
             probe = pending.withColumn(
                 "__cell", F.explode(cells.k_ring(F.col("__pcell"), r))
             )
-        cand = probe.join(g_r.drop("__gcell"), "__cell", "inner").withColumn(
-            "__d",
-            dist_fn(F.col(point_lon), F.col(point_lat), F.col("__glon"), F.col("__glat")),
-        )
+        cand = probe.join(g_r.drop("__gcell"), "__cell", "inner").withColumn("__d", dist)
+        topk = _nearest_k(cand, point_cols, key_cols, k)
         final_ring = r >= max_ring
         # At the final ring, keeping unverified candidates is only sound for
         # fallback='drop' (documented best-within-block semantics). For
@@ -331,80 +366,38 @@ def nearest_grid_join(
         # grid point just outside the block (diagonal corner ~1.41*r*res),
         # and a k>1 point with < k in-block candidates is short — both must
         # fall through to the brute pass for BallTree-exact results.
-        keep_unverified = final_ring and fallback != "brute"
-        if k == 1:
-            # k=1 fast path: min_by aggregation gets map-side partial
-            # aggregation (one surviving row per point per input partition)
-            # instead of the full candidate shuffle a row_number window needs.
-            best = cand.groupBy(*[F.col(c) for c in point_cols]).agg(
-                F.min_by(
-                    F.struct(F.col("__gid"), F.col("__d")),
-                    F.struct(F.col("__d"), F.col("__gid")),
-                ).alias("__b")
-            )
-            topk = best.select(
-                *point_cols,
-                F.col("__b.__gid").alias("__gid"),
-                F.lit(1).alias("__rk"),
-                F.col("__b.__d").alias("__d"),
-            )
-            done = topk if keep_unverified else topk.filter(F.col("__d") < guard(r))
+        if final_ring and fallback != "brute":
+            done = topk
+        elif k == 1:
+            done = topk.filter(F.col("__d") < guard(r))
         else:
-            w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-                F.col("__d").asc(), F.col("__gid").asc()
-            )
-            topk = (
-                cand.withColumn("__rk", F.row_number().over(w))
-                .filter(F.col("__rk") <= k)
-            )
-            if keep_unverified:
-                done = topk
-            else:
-                # complete iff we found k candidates AND the worst is inside
-                # the guarantee radius
-                w2 = Window.partitionBy(*[F.col(c) for c in key_cols])
-                topk = topk.withColumn("__kmax", F.max("__d").over(w2)).withColumn(
-                    "__kcnt", F.count(F.lit(1)).over(w2)
-                )
-                done = topk.filter(
-                    (F.col("__kcnt") >= k) & (F.col("__kmax") < guard(r))
-                ).drop("__kmax", "__kcnt")
-        results.append(
-            done.select(
-                *point_cols,
-                F.col("__gid").alias(grid_id),
-                F.col("__rk").alias("nn_rank"),
-                F.col("__d").alias("nn_dist"),
-            )
-        )
+            # complete iff we found k candidates AND the worst is inside
+            # the guarantee radius
+            w2 = Window.partitionBy(*[F.col(c) for c in key_cols])
+            done = topk.withColumn("__kmax", F.max("__d").over(w2)).withColumn(
+                "__kcnt", F.count(F.lit(1)).over(w2)
+            ).filter(
+                (F.col("__kcnt") >= k) & (F.col("__kmax") < guard(r))
+            ).drop("__kmax", "__kcnt")
         if final_ring:
+            results.append(project(done))
             break
-        if adaptive:
-            # materialize this round and probe for stragglers: dense lattices
-            # finish in one round, so paying one count() action here beats
-            # shipping a 4-round chained plan of anti-joins that all turn out
-            # empty (measured 3x on the bench grid). Shared via lazily-cleaned
-            # localCheckpoint, not cache(): checkpoint blocks are freed by the
-            # ContextCleaner when the DataFrame is GC'd, so repeated adaptive
-            # calls in a long session don't leak storage (same lifecycle as
-            # dedup.minhash_lsh_pairs).
-            done = done.localCheckpoint(eager=False)
-            results[-1] = done.select(
-                *point_cols,
-                F.col("__gid").alias(grid_id),
-                F.col("__rk").alias("nn_rank"),
-                F.col("__d").alias("nn_dist"),
-            )
-            pending_next = pending.join(
-                done.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-            )
-            if pending_next.isEmpty():
-                break
-            pending = pending_next
-        else:
-            pending = pending.join(
-                done.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-            )
+        # materialize this round and probe for stragglers: dense lattices
+        # finish in one round, so paying one isEmpty() action here beats
+        # shipping a 4-round chained plan of anti-joins that all turn out
+        # empty (measured 3x on the bench grid). Shared via lazily-cleaned
+        # localCheckpoint, not cache(): checkpoint blocks are freed by the
+        # ContextCleaner when the DataFrame is GC'd, so repeated calls in a
+        # long session don't leak storage (same lifecycle as
+        # dedup.minhash_lsh_pairs).
+        done = done.localCheckpoint(eager=False)
+        results.append(project(done))
+        pending_next = pending.join(
+            done.select(*key_cols).distinct(), on=key_cols, how="left_anti"
+        )
+        if pending_next.isEmpty():
+            break
+        pending = pending_next
         r *= 2
 
     out = results[0]
@@ -418,40 +411,8 @@ def nearest_grid_join(
         rest = pending.join(
             results[-1].select(*key_cols).distinct(), on=key_cols, how="left_anti"
         ).drop("__pcell")
-        bcand = rest.crossJoin(
-            _maybe_broadcast(g.drop("__gcell"), broadcast_grid)
-        ).withColumn(
-            "__d",
-            dist_fn(F.col(point_lon), F.col(point_lat), F.col("__glon"), F.col("__glat")),
-        )
-        if k == 1:
-            bbest = bcand.groupBy(*[F.col(c) for c in point_cols]).agg(
-                F.min_by(
-                    F.struct(F.col("__gid"), F.col("__d")),
-                    F.struct(F.col("__d"), F.col("__gid")),
-                ).alias("__b")
-            )
-            btop = bbest.select(
-                *point_cols,
-                F.col("__b.__gid").alias("__gid"),
-                F.lit(1).alias("__rk"),
-                F.col("__b.__d").alias("__d"),
-            )
-        else:
-            bw = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-                F.col("__d").asc(), F.col("__gid").asc()
-            )
-            btop = bcand.withColumn("__rk", F.row_number().over(bw)).filter(
-                F.col("__rk") <= k
-            )
-        out = out.unionByName(
-            btop.select(
-                *point_cols,
-                F.col("__gid").alias(grid_id),
-                F.col("__rk").alias("nn_rank"),
-                F.col("__d").alias("nn_dist"),
-            )
-        )
+        bcand = rest.crossJoin(F.broadcast(g.drop("__gcell"))).withColumn("__d", dist)
+        out = out.unionByName(project(_nearest_k(bcand, point_cols, key_cols, k)))
     return out
 
 

@@ -252,12 +252,6 @@ def opendap_grid(lat0: float, lon0: float, step: float,
     return dict(lat0=lat0, lon0=lon0, step=step, nlat=nlat, nlon=nlon, t0=t0)
 
 
-def snap_index(coord: float, origin: float, step: float, n: int) -> int:
-    """Nearest-cell index — ``xr.sel(..., method='nearest')``
-    (`gridmet.py:44`) as plain arithmetic, clipped to the grid."""
-    return max(0, min(n - 1, int(math.floor((coord - origin) / step + 0.5))))
-
-
 def read_opendap(
     spark: SparkSession,
     grid: dict,

@@ -19,12 +19,19 @@ Reference parity: the reference keeps per-site files named by location
 from __future__ import annotations
 
 import numpy as np
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geo_epic_spark.cells import np_zorder_key, zorder_key
 
 __all__ = ["write_zorder_layout", "bbox_scan", "zrange_for_bbox"]
+
+# The layout parameters a scan must reuse, written next to the data as a
+# one-row JSON table. Spark's file reader skips ``_``-prefixed paths, so the
+# sidecar never shows up as rows of the layout itself.
+LAYOUT_META = "_layout"
+LAYOUT_SCHEMA = "lon string, lat string, bits int, z_col string, partition_prefix_bits int"
 
 
 def write_zorder_layout(
@@ -75,6 +82,10 @@ def write_zorder_layout(
             .write.mode("overwrite")
             .parquet(path)
         )
+    layout = dict(lon=lon, lat=lat, bits=bits, z_col=z_col,
+                  partition_prefix_bits=partition_prefix_bits)
+    df.sparkSession.createDataFrame([layout], LAYOUT_SCHEMA).coalesce(1).write.mode(
+        "overwrite").json(path + "/" + LAYOUT_META)
 
 
 def zrange_for_bbox(
@@ -101,17 +112,39 @@ def bbox_scan(
     lat0: float,
     lon1: float,
     lat1: float,
-    lon: str = "cx",
-    lat: str = "cy",
-    bits: int = 16,
-    z_col: str = "z",
-    partition_prefix_bits: int = 0,
+    lon: str | None = None,
+    lat: str | None = None,
+    bits: int | None = None,
+    z_col: str | None = None,
+    partition_prefix_bits: int | None = None,
 ) -> DataFrame:
     """Bbox query over a z-laid-out table: ``z BETWEEN corner-range`` (the
     predicate the parquet stats prune on — and, when the layout was written
     with a prefix partition, ``zp`` range for directory pruning) AND the
     exact lon/lat box. Results are identical to filtering the raw table;
-    only the rows *materialized* differ (see scan_metrics)."""
+    only the rows *materialized* differ (see scan_metrics).
+
+    ``lon``, ``lat``, ``bits``, ``z_col`` and ``partition_prefix_bits`` come
+    from the layout sidecar ``write_zorder_layout`` wrote. A value passed
+    here must equal the written one: a different ``bits`` or prefix would
+    compute the wrong key range and silently drop in-bbox rows, so a
+    mismatch, or a path without the sidecar, raises ``ValueError``."""
+    try:
+        written = spark.read.schema(LAYOUT_SCHEMA).json(path + "/" + LAYOUT_META).collect()
+    except AnalysisException as e:
+        raise ValueError(f"{path} has no {LAYOUT_META} sidecar: "
+                         "write it with write_zorder_layout") from e
+    if len(written) != 1:
+        raise ValueError(f"{path}/{LAYOUT_META} holds {len(written)} rows, not 1")
+    layout = written[0].asDict()
+    given = dict(lon=lon, lat=lat, bits=bits, z_col=z_col,
+                 partition_prefix_bits=partition_prefix_bits)
+    for name, value in given.items():
+        if value is not None and value != layout[name]:
+            raise ValueError(f"bbox_scan {name}={value!r} but {path} was written "
+                             f"with {name}={layout[name]!r}")
+    lon, lat, bits, z_col = layout["lon"], layout["lat"], layout["bits"], layout["z_col"]
+    prefix = layout["partition_prefix_bits"]
     zlo, zhi = zrange_for_bbox(lon0, lat0, lon1, lat1, bits=bits)
     df = spark.read.parquet(path)
     cond = (
@@ -119,7 +152,7 @@ def bbox_scan(
         & (F.col(lon) >= lon0) & (F.col(lon) <= lon1)
         & (F.col(lat) >= lat0) & (F.col(lat) <= lat1)
     )
-    if partition_prefix_bits:
-        shift = 2 * bits - partition_prefix_bits
+    if prefix:
+        shift = 2 * bits - prefix
         cond = cond & (F.col("zp") >= (zlo >> shift)) & (F.col("zp") <= (zhi >> shift))
     return df.filter(cond)

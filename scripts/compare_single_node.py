@@ -67,7 +67,6 @@ def single_node_nearest(img: dict, nr: int, nc: int, sp: float) -> np.ndarray:
     for a regular lattice BallTree reduces to clamp+round; that is exactly
     what GeoInterface does conceptually — use the vectorized closed form (the
     fastest possible single-node implementation, favoring the reference)."""
-    g = synth.grid_np(nr, nc, sp) if hasattr(synth, "grid_np") else None
     # lattice origin from grid_sql semantics: reproduce via one cell
     # (cheap): grid ids are row*nc+col on a lattice anchored like synth
     lon0, lat0 = -100.0 + sp / 2, 40.0 + sp / 2  # synth.AOI anchored lattice

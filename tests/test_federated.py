@@ -20,7 +20,6 @@ from geo_epic_spark.sources.federated import (
     read_gee_collection,
     read_opendap,
     read_sda,
-    snap_index,
 )
 
 SDA_SCHEMA = "mukey bigint, cokey bigint, comppct_r double"
@@ -117,11 +116,32 @@ def test_sda_scan_plan_is_map_only(spark):
 # S7 — OPeNDAP
 # ---------------------------------------------------------------------------
 
-def test_snap_index_matches_bruteforce():
+def test_opendap_snap_matches_bruteforce(spark):
+    """read_opendap snaps each point to its nearest grid cell, clipped to
+    the grid: the transport echoes the cell as lat_idx*1000+lon_idx, which
+    must equal the brute-force argmin over the grid's coordinate vectors."""
     lats = 25.0 + 0.125 * np.arange(40)
-    for coord in [25.0, 25.06, 25.063, 29.874, 24.0, 40.0, 27.31]:
-        best = int(np.argmin(np.abs(lats - coord)))
-        assert snap_index(coord, 25.0, 0.125, 40) == best
+    lons = -125.0 + 0.125 * np.arange(30)
+    coords = [25.0, 25.06, 25.063, 29.874, 24.0, 40.0, 27.31]
+    pts = spark.createDataFrame(
+        [(i, lat, -125.0 + (lat - 25.0) * 0.7) for i, lat in enumerate(coords)],
+        "point_id bigint, lat double, lon double",
+    )
+
+    def cell_transport(request):
+        n = request["t_hi"] - request["t_lo"]
+        return json.dumps([request["lat_idx"] * 1000 + request["lon_idx"]] * n)
+
+    grid = opendap_grid(25.0, -125.0, 0.125, len(lats), len(lons), "1979-01-01")
+    got = {
+        r.point_id: int(r.ws)
+        for r in read_opendap(spark, grid, pts, ["ws"], start_day=0, n_days=1,
+                              transport=cell_transport).collect()
+    }
+    for p in pts.collect():
+        want = (int(np.argmin(np.abs(lats - p.lat))) * 1000
+                + int(np.argmin(np.abs(lons - p.lon))))
+        assert got[p.point_id] == want, (p, got[p.point_id])
 
 
 def test_opendap_chunks_cover_range_exactly(spark):

@@ -11,7 +11,13 @@ import pytest
 
 from geo_epic_spark import synth
 from geo_epic_spark.plans.checks import formatted_plan, pushed_filters, scan_metrics
-from geo_epic_spark.sources.layout import bbox_scan, write_zorder_layout, zrange_for_bbox
+from geo_epic_spark.sources.layout import (
+    LAYOUT_META,
+    LAYOUT_SCHEMA,
+    bbox_scan,
+    write_zorder_layout,
+    zrange_for_bbox,
+)
 
 N = 200_000
 N_FILES = 32
@@ -43,6 +49,10 @@ def layouts(spark, tmp_path_factory):
         .write.mode("overwrite")
         .parquet(unsorted_path)
     )
+    spark.createDataFrame(
+        [dict(lon="cx", lat="cy", bits=16, z_col="z", partition_prefix_bits=0)],
+        LAYOUT_SCHEMA,
+    ).write.json(unsorted_path + "/" + LAYOUT_META)
     return sorted_path, part_path, unsorted_path
 
 
@@ -105,6 +115,22 @@ class TestZorderPruning:
         # the formatted plan
         plan = formatted_plan(_q(spark, part_path, partition_prefix_bits=16))
         assert "PartitionFilters" in plan and "zp" in plan
+
+    def test_layout_mismatch_raises(self, spark, layouts, tmp_path):
+        """A scan whose prefix or key bits differ from the written layout
+        would compute the wrong key range and drop in-bbox rows; it must
+        raise instead, and so must a path without the layout sidecar."""
+        _, part_path, _ = layouts
+        with pytest.raises(ValueError, match="partition_prefix_bits=8"):
+            _q(spark, part_path, partition_prefix_bits=8)
+        with pytest.raises(ValueError, match=" bits=12"):
+            _q(spark, part_path, bits=12)
+        bare = str(tmp_path / "bare")
+        spark.range(3).write.parquet(bare)
+        with pytest.raises(ValueError, match=LAYOUT_META):
+            _q(spark, bare)
+        # the sidecar is not data: a plain read of the layout sees only rows
+        assert spark.read.parquet(part_path).count() == N
 
     def test_zrange_contains_bbox(self):
         """Monotonicity witness for zrange_for_bbox on a lattice of interior

@@ -1,9 +1,14 @@
 """Physical-plan shape pins: the 100 TB-critical properties must hold.
 
 - flagship PIP join: broadcast hash join, zero shuffle of the image stream
-- nearest-grid join ring-1: broadcast join for the candidate stage
+- nearest-grid join ring-1 fast path: one broadcast hash join, no union,
+  k=1 as a partial min_by aggregate (no window)
 - parquet scans: predicate pushdown + column pruning reach the scan
-- whole-stage codegen present on the hot path
+- group-bys: partial (map-side) aggregation
+- opc_append, audio/frame pipelines: no shuffle of the fact or payload rows
+- sessionize: one Exchange for the whole DAG
+- AQE: a shuffled join splits the planted hot cell
+- window top-k: WindowGroupLimit trims map-side before the exchange
 - dedup's bucketed self-joins: shuffled hash join, never broadcast
 """
 
@@ -13,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geo_epic_spark import synth
-from geo_epic_spark.operators.spatial import pip_join
+from geo_epic_spark.operators.spatial import nearest_grid_join, pip_join
 from geo_epic_spark.plans.checks import (
     codegen_stage_count,
     formatted_plan,
@@ -32,6 +37,22 @@ def test_pip_join_is_broadcast_and_shuffle_free(spark):
     # the image stream must not shuffle: broadcast exchanges only
     assert shuffle_free(out)
     assert codegen_stage_count(out) >= 1
+
+
+def test_nearest_grid_ring1_is_one_broadcast_join(spark):
+    """max_ring=1 + fallback='drop' (the covered-raster path site
+    assignment runs) compiles to ONE broadcast hash join and a partial
+    min_by aggregate: no escalation Union, no row_number Window."""
+    import re
+
+    imgs = synth.images_meta_df(spark, 1000).select("i", "cx", "cy")
+    grid = synth.grid_df(spark, 25, 40, 0.125)
+    plan = formatted_plan(nearest_grid_join(
+        imgs, grid, res=0.125, point_id="i", point_lon="cx", point_lat="cy",
+        max_ring=1, fallback="drop"))
+    assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) == 1, plan
+    assert "Union" not in plan and "Window" not in plan, plan
+    assert "partial_min_by" in plan, plan
 
 
 def test_parquet_scan_pushdown_and_pruning(spark, tmp_path):
