@@ -814,13 +814,13 @@ def semantic_dedup(
     and AQE splits outliers (boilerplate embedding clusters are the dense-
     cell analog of the north rule's urban tiles).
     """
-    from geo_epic_spark.operators.similarity import ivf_assign
+    from geo_epic_spark.operators.similarity import _const_array_sql, ivf_assign
 
     assigned = ivf_assign(df.select(key, vec), cents, vec=vec)
     if priority == "key":
         order = [F.col(key).asc()]
     elif priority == "centroid_far":
-        carr = F.array(*[F.array(*[F.lit(v) for v in row]) for row in cents])
+        carr = F.expr(_const_array_sql(cents, 2))
         cvec = F.element_at(carr, (F.col("ivf_list") + 1).cast("int"))
         d2c = F.aggregate(
             F.zip_with(F.col(vec), cvec, lambda a, b: (a - b) * (a - b)),

@@ -9,6 +9,8 @@ centroid buckets only, cutting the scanned fraction to ~nprobe/C.
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -16,8 +18,9 @@ from pyspark.sql import functions as F
 
 def _dot(a, b) -> F.Column:
     # Deliberately the zip_with+aggregate HOF, NOT a static element_at
-    # unroll: pq_topk's m=8 ADC fold won 2x by unrolling into codegen,
-    # but at dim=64 the 192-term unrolled tree blows past the codegen
+    # unroll: pq_topk's m-term ADC sum is unrolled into codegen (m lookups
+    # per scored pair, 2x faster at m=8 than the folded HOF), but at
+    # dim=64 the 192-term unrolled tree blows past the codegen
     # method limits and falls back to generic interpreted eval — measured
     # 10x SLOWER (37 s vs 3.8 s, 500k x 20 pairs) than this specialized
     # HOF evaluator. Unroll only small static folds; the true fast path
@@ -272,14 +275,46 @@ def load_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
     return assigned, [list(r["centroid"]) for r in cent_rows]
 
 
-def _centroid_array(cents: list[list[float]]) -> F.Column:
-    return F.array(*[F.array(*[F.lit(v) for v in row]) for row in cents])
+def _float_array(values, ndim: int) -> np.ndarray:
+    """``values`` as a float64 array of exactly ``ndim`` dimensions; raises
+    ValueError when it is ragged, empty or holds a NaN or infinity, any of
+    which the array expressions below would null-pad or carry into their
+    argmins without a sign."""
+    try:
+        a = np.asarray(values, dtype=np.float64)
+    except ValueError:
+        raise ValueError(f"ragged constant array: every level of the {ndim}-d "
+                         "nesting must have one length") from None
+    if a.ndim != ndim or a.size == 0:
+        raise ValueError(f"expected a non-empty {ndim}-d array, got shape {a.shape}")
+    if not np.isfinite(a).all():
+        raise ValueError("constant array holds a NaN or infinite entry")
+    return a
+
+
+def _const_array_sql(values, ndim: int) -> str:
+    """SQL text for a constant float64 array (a centroid table, a stack of
+    PQ codebooks), validated by ``_float_array``.
+
+    The whole array crosses to the JVM as ONE JSON string that ``from_json``
+    parses and the optimizer constant-folds into a single Literal, so a plan
+    costs the same few driver calls whatever the array's size (an ``F.lit``
+    per number costs a py4j round trip per number: 16,384 for a 16x256x4
+    codebook). Python writes each float as its shortest round-tripping
+    decimal, so every value, subnormals and -0.0 included, arrives
+    bit-exact; the JSON holds no quote, so it is safe inside the SQL
+    string."""
+    body = json.dumps(_float_array(values, ndim).tolist())
+    return f"from_json('{body}', '{'array<' * ndim}double{'>' * ndim}')"
 
 
 def ivf_assign(vectors: DataFrame, cents: list[list[float]], vec: str = "embedding") -> DataFrame:
-    """Assign each vector to its nearest centroid id (the IVF list id). At
-    100 TB this is the write-time partition column."""
-    carr = _centroid_array(cents)
+    """Assign each vector to its nearest centroid id (the IVF list id),
+    ties to the lowest id. At 100 TB this is the write-time partition
+    column. The centroid table is one constant-folded literal
+    (``_const_array_sql``), so building the plan costs the same at 16 or
+    4096 centroids; raises ValueError on a ragged or non-finite table."""
+    carr = F.expr(_const_array_sql(cents, 2))
     d2 = F.transform(
         carr,
         lambda cvec: F.aggregate(
@@ -305,7 +340,7 @@ def ivf_topk(
     """IVF ANN: probe only the nprobe nearest centroid lists per query.
     Candidate scan fraction ~= nprobe / len(cents); exact cosine rank within
     the probed lists."""
-    carr = _centroid_array(cents)
+    carr = F.expr(_const_array_sql(cents, 2))
     qd2 = F.transform(
         carr,
         lambda cvec: F.aggregate(
@@ -377,17 +412,26 @@ def quantize_embeddings(
 # Product quantization (PQ) — compressed ANN (Jégou et al. 2011)
 # ---------------------------------------------------------------------------
 
-def _pq_sub(col: Column, i: int, dsub: int) -> Column:
-    return F.slice(col, i * dsub + 1, dsub)
+def _pq_dist_sql(vec: str, codebooks: list[list[list[float]]]) -> str:
+    """SQL text for the m x K table of squared L2 distances from each
+    dsub-slice of ``vec`` to every code of that subspace's codebook.
 
-
-def _pq_codebook_arrays(codebooks: list[list[list[float]]]) -> list[Column]:
-    return [
-        F.array(*[
-            F.array(*[F.lit(float(x)) for x in code]) for code in cb
-        ])
-        for cb in codebooks
-    ]
+    One expression over the one codebook literal (``_const_array_sql``), so
+    its size and its build cost do not grow with m, K or dsub. Each
+    distance is the left-to-right fold from 0.0 over the slice, the order
+    the DuckDB oracle replays. A vector whose length is not m*dsub raises
+    at run time (``zip_with`` would null-pad a short slice, and the tail of
+    a long one would be ignored)."""
+    cb = _float_array(codebooks, 3)
+    m, _, dsub = cb.shape
+    return (
+        f"CASE WHEN array_size(`{vec}`) != {m * dsub} THEN raise_error("
+        f"'PQ: vector length is not {m}*{dsub}') ELSE "
+        f"transform(sequence(0, {m - 1}), sub_i -> "
+        f"transform({_const_array_sql(cb, 3)}[sub_i], code_v -> aggregate("
+        f"zip_with(slice(`{vec}`, sub_i * {dsub} + 1, {dsub}), code_v, "
+        f"(a, b) -> (a - b) * (a - b)), 0D, (s, x) -> s + x))) END"
+    )
 
 
 def pq_encode(
@@ -398,25 +442,19 @@ def pq_encode(
     """Encode each vector into M uint8-sized codes (one per subspace):
     code_i = argmin_c ||sub_i(v) - codebook_i[c]||², ties -> lowest code.
 
-    Pure Column HOFs (slice / zip_with / aggregate / array_position) — the
-    encode runs in whole-stage codegen during the table scan, like
-    `ivf_assign`. 64-dim float vectors compress 32× at M=8, which is what
-    makes exhaustive ADC scans affordable at 10^9+ rows; at scale the
-    codes column is written next to the IVF list id.
+    One Column expression (``_pq_dist_sql``'s distance table, then an
+    ``array_position(min)`` argmin per subspace) evaluated JVM-side during
+    the table scan, like ``ivf_assign``; the codebook is one constant-folded
+    literal, so building the plan costs the same few driver calls at any
+    codebook size. Raises ValueError on a ragged or non-finite codebook and
+    fails the job on a vector whose length is not m*dsub. 64-dim float
+    vectors compress 32× at M=8, which is what makes exhaustive ADC scans
+    affordable at 10^9+ rows; at scale the codes column is written next to
+    the IVF list id.
     """
-    dsub = len(codebooks[0][0])
-    carrs = _pq_codebook_arrays(codebooks)
-    codes = []
-    for i, carr in enumerate(carrs):
-        sub = _pq_sub(F.col(vec), i, dsub)
-        d2 = F.transform(
-            carr,
-            lambda cvec: F.aggregate(
-                F.zip_with(sub, cvec, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda s, x: s + x),
-        )
-        codes.append(F.array_position(d2, F.array_min(d2)) - 1)
-    return vectors.withColumn("pq_codes", F.array(*codes))
+    codes = F.expr(f"transform({_pq_dist_sql(vec, codebooks)}, "
+                   "d -> array_position(d, array_min(d)) - 1)")
+    return vectors.withColumn("pq_codes", codes)
 
 
 def pq_encode_arrow(
@@ -442,8 +480,8 @@ def pq_encode_arrow(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    cbs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    dsub = cbs[0].shape[1]
+    cbs = _float_array(codebooks, 3)
+    dsub = cbs.shape[2]
 
     # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2, and ||x||^2 is constant across
     # codes so argmin drops it: argmin_c (||c||^2 - 2 x.c). The matmul form
@@ -457,6 +495,8 @@ def pq_encode_arrow(
         if len(v) == 0:
             return pd.Series([], dtype=object)
         x = np.stack(v.to_numpy()).astype(np.float64)
+        if x.shape[1] != len(cbs) * dsub:
+            raise ValueError(f"PQ: vector length {x.shape[1]} is not {len(cbs)}*{dsub}")
         codes = np.empty((len(x), len(cbs)), dtype=np.int64)
         for i, cb in enumerate(cbs):
             sub = x[:, i * dsub:(i + 1) * dsub]
@@ -482,36 +522,28 @@ def pq_topk(
     code row scores with M table lookups — no float vectors are read at
     scan time, only the codes column.
 
+    The lookup table is ``_pq_dist_sql`` over one constant-folded codebook
+    literal and the ADC sum is one SQL expression, so building the plan
+    costs the same few driver calls at any codebook size. Raises ValueError
+    on a ragged or non-finite codebook; a query vector whose length is not
+    m*dsub fails the job.
+
     Output: (q_key, key, rank, adc_dist); rank by (distance asc, key) —
     the deterministic tie-break every ANN oracle in this engine uses.
     """
-    dsub = len(codebooks[0][0])
-    m = len(codebooks)
-    carrs = _pq_codebook_arrays(codebooks)
-    lut = F.array(*[
-        F.transform(
-            carr,
-            lambda cvec: F.aggregate(
-                F.zip_with(_pq_sub(F.col(q_vec), i, dsub), cvec,
-                           lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda s, x: s + x),
-        )
-        for i, carr in enumerate(carrs)
-    ])
+    lut = F.expr(_pq_dist_sql(q_vec, codebooks))
     q = F.broadcast(queries.select(q_key, q_vec).withColumn("__lut", lut))
     joined = encoded.select(key, "pq_codes").crossJoin(q)
     # ADC = Σ_i lut[i][code_i]. m is known statically, so unroll the fold
     # into a plain sum of element_at terms: the unrolled expression enters
-    # whole-stage codegen, whereas an F.aggregate(F.sequence(...)) lambda
+    # whole-stage codegen, whereas an aggregate(sequence(...)) lambda
     # evaluates interpreted row-at-a-time — on the (codes × queries)
     # scan, the one hot path of the whole ADC design. fp addition order is
     # the identical left-to-right i = 1..m fold, so scores (and the oracle
     # hash) are bit-identical.
-    adc = F.lit(0.0)
-    for i in range(1, m + 1):
-        adc = adc + F.element_at(
-            F.element_at(F.col("__lut"), i),
-            (F.element_at(F.col("pq_codes"), i) + F.lit(1)).cast("int"))
+    adc = F.expr("0D" + "".join(
+        f" + element_at(element_at(__lut, {i}), CAST(element_at(pq_codes, {i}) + 1 AS INT))"
+        for i in range(1, len(codebooks) + 1)))
     return _ranked_topk(
         joined.withColumn("adc_dist", adc), q_key, k,
         [F.asc("adc_dist"), F.asc(key)],

@@ -13,12 +13,14 @@ Prints one JSON line; numbers land in BASELINE.md.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from geo_epic_spark import cells, synth  # noqa: E402
 from geo_epic_spark.geometry import points_in_polygon  # noqa: E402

@@ -3,9 +3,11 @@ with scale annotations. Run: python scripts/dump_plans.py"""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -139,7 +141,7 @@ Generated by `scripts/dump_plans.py` (re-run to refresh). These are the plan
 shapes `tests/test_plans.py` pins in CI; annotations explain why each shape
 is the one that survives a 100x scale-up (see DESIGN_AT_SCALE.md).
 """
-    open("/root/repo/PLANS.md", "w").write(header + "\n" + "\n".join(sections))
+    open(os.path.join(ROOT, "PLANS.md"), "w").write(header + "\n" + "\n".join(sections))
     spark.stop()
 
 

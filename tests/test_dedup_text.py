@@ -869,3 +869,49 @@ class TestPQ:
         tdf = spark.createDataFrame([(0, [0.4, 1.1])],
                                     "vec_id long, embedding array<double>")
         assert list(pq_encode_arrow(tdf, tie_cb).collect()[0].pq_codes) == [0, 0]
+
+    @pytest.mark.parametrize("cb", [
+        [[[0.0, 0.0], [1.0, 0.0]], [[5.0, 5.0]]],
+        [[[0.0, 0.0], [1.0, 0.0]], [[5.0], [6.0]]],
+        [[[0.0, float("nan")], [1.0, 0.0]], [[5.0, 5.0], [6.0, 5.0]]],
+        [[[0.0, float("inf")], [1.0, 0.0]], [[5.0, 5.0], [6.0, 5.0]]],
+    ], ids=["ragged_k", "ragged_dsub", "nan", "inf"])
+    def test_bad_codebook_raises_at_build(self, spark, cb):
+        """A codebook whose subspaces differ in K or dsub, or that holds a
+        non-finite entry, is refused before any job runs by both encoders
+        and by the ADC scan."""
+        from geo_epic_spark.operators.similarity import (
+            pq_encode, pq_encode_arrow, pq_topk,
+        )
+
+        df = spark.createDataFrame([(0, [0.0] * 4)], "vec_id long, embedding array<double>")
+        q = spark.createDataFrame([(0, [0.0] * 4)], "q_id long, q_vec array<double>")
+        enc = df.withColumn("pq_codes", F.array(F.lit(0), F.lit(0)))
+        for build in (lambda: pq_encode(df, cb), lambda: pq_encode_arrow(df, cb),
+                      lambda: pq_topk(enc, q, cb)):
+            with pytest.raises(ValueError):
+                build()
+
+    @pytest.mark.parametrize("dim", [3, 5])
+    @pytest.mark.parametrize("encoder", ["pq_encode", "pq_encode_arrow"])
+    def test_vector_length_mismatch_raises(self, spark, encoder, dim):
+        """A vector that is not m*dsub long fails the encode: a short one
+        no longer null-pads its last slice, a long one no longer drops its
+        tail."""
+        from geo_epic_spark.operators import similarity
+
+        df = spark.createDataFrame([(0, [0.5] * dim)], "vec_id long, embedding array<double>")
+        with pytest.raises(Exception, match=r"PQ: vector length"):
+            getattr(similarity, encoder)(df, self.CB).collect()
+
+    def test_codebook_literal_is_bit_exact(self, spark):
+        """The JSON literal carries every float64 to the JVM unchanged."""
+        import math
+        import struct
+
+        from geo_epic_spark.operators.similarity import _const_array_sql
+
+        vals = [5e-324, -0.0, 1 / 3, math.nextafter(1.0, 2.0), 1e308, -1e308,
+                2.2250738585072014e-308]
+        got = spark.range(1).select(F.expr(_const_array_sql([vals], 2)).alias("a")).first().a
+        assert [struct.pack("<d", x) for x in got[0]] == [struct.pack("<d", x) for x in vals]

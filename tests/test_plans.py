@@ -10,6 +10,8 @@
 - AQE: a shuffled join splits the planted hot cell
 - window top-k: WindowGroupLimit trims map-side before the exchange
 - dedup's bucketed self-joins: shuffled hash join, never broadcast
+- PQ/IVF constants: the codebook is one folded Literal, and the py4j calls
+  that build pq_topk, pq_encode and ivf_assign do not grow with its size
 """
 
 from __future__ import annotations
@@ -256,3 +258,75 @@ def test_bucket_self_join_is_shuffled(spark, op):
     assert pair_joins == ["ShuffledHashJoin"], plan
     if len(joins) == 1:
         assert not has_broadcast_hash_join(out), plan
+
+
+def _codebook(shape: tuple[int, ...]) -> list:
+    import numpy as np
+
+    return np.random.Generator(np.random.PCG64(5)).uniform(-1.0, 1.0, shape).tolist()
+
+
+def test_pq_codebook_is_one_folded_literal(spark):
+    """pq_encode ships the codebook as one JSON string that the optimizer
+    constant-folds: the optimized plan holds it as ONE array<array<array
+    <double>>> Literal, and no from_json is left to run per row."""
+    import json
+
+    from geo_epic_spark.operators.similarity import pq_encode
+
+    vecs = spark.createDataFrame([(0, [0.0] * 64)], "vec_id long, embedding array<double>")
+    plan = pq_encode(vecs, _codebook((4, 16, 16)))._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    assert "from_json" not in plan.toString(), plan.toString()
+
+    def array_depth(dt) -> tuple:
+        depth = 0
+        while isinstance(dt, dict) and dt.get("type") == "array":
+            dt, depth = dt["elementType"], depth + 1
+        return depth, dt
+
+    (project,) = [n for n in json.loads(plan.toJSON()) if n["class"].endswith(".Project")]
+    lits = [array_depth(e["dataType"]) for expr in project["projectList"] for e in expr
+            if e["class"].endswith("expressions.Literal")]
+    assert lits.count((3, "double")) == 1, lits
+    assert lits.count((0, "double")) == 1, lits  # the distance fold's 0.0 seed only
+
+
+def test_plan_build_calls_do_not_grow_with_constants(spark, monkeypatch):
+    """Building pq_topk, pq_encode and ivf_assign sends the same number of
+    py4j commands at a 4x16x4 and a 16x256x4 codebook, and at 16 and 256
+    centroids: the constants cross as one literal, and every expression
+    over them is one SQL string or one lambda tree, so no call is made per
+    number, code or subspace."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from geo_epic_spark.operators.similarity import ivf_assign, pq_encode, pq_topk
+
+    me, sent = threading.get_ident(), [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if threading.get_ident() == me:  # the finalizer thread's GC commands do not count
+            sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+
+    def calls(build, consts) -> int:
+        before = sent[0]
+        build(consts)
+        return sent[0] - before
+
+    vecs = spark.createDataFrame([(0, [0.0] * 64)], "vec_id long, embedding array<double>")
+    q = spark.createDataFrame([(0, [0.0] * 64)], "q_id long, q_vec array<double>")
+    enc = vecs.withColumn("pq_codes", F.array(F.lit(0)))
+    builds = {
+        "pq_topk": (lambda cb: pq_topk(enc, q, cb), (4, 16, 4), (16, 256, 4)),
+        "pq_encode": (lambda cb: pq_encode(vecs, cb), (4, 16, 4), (16, 256, 4)),
+        "ivf_assign": (lambda c: ivf_assign(vecs, c), (16, 64), (256, 64)),
+    }
+    for name, (build, small, big) in builds.items():
+        calls(build, _codebook(small))  # warm py4j's lazily resolved JVM handles
+        n_small, n_big = calls(build, _codebook(small)), calls(build, _codebook(big))
+        assert n_big == n_small, (name, n_small, n_big)
