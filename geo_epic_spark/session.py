@@ -36,9 +36,10 @@ DEFAULT_CONF: dict[str, str] = {
     # Keep shuffle partition count moderate for local runs; AQE coalesces.
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.files.maxPartitionBytes": "128m",
-    # local mode: the driver JVM hosts all executor threads — size the heap
-    # for 32 of them (~1.5g each) or GC contention caps thread scaling.
-    "spark.driver.memory": "48g",
+    # local mode: the driver JVM hosts all executor threads, so it gets half
+    # of physical memory in whole GB (at least 1g); the rest is left to the
+    # Python workers and the OS.
+    "spark.driver.memory": f"{max(1, os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**31)}g",
     # G1 with a relaxed pause target + large regions: ~12% faster than G1
     # defaults on the 32-thread broadcast-join hot path (measured 20.1s vs
     # 22.9s at 24M rows). ZGC and ParallelGC are both far worse here.

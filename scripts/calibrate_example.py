@@ -19,7 +19,7 @@ whose monthly normals minimize SSE against the observed normals on the
 (UAVO, DAYP) columns. The search must recover the planted (3.5, 0.5) — the
 reference's default fill (`weather/main.py:18-37`) and wet threshold.
 
-Run: python scripts/calibrate_example.py       (~1 min on local[16])
+Run: python scripts/calibrate_example.py       (every core; ~1 min at 16 cores)
 """
 
 from __future__ import annotations
@@ -60,7 +60,7 @@ def sse_against(cand, target) -> float:
 
 
 def main() -> None:
-    spark = get_spark(os.environ.get("SPARK_GRAFT_CPUS", "16"), "calibrate")
+    spark = get_spark(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()), "calibrate")
     daily = synth.weather_daily_df(spark, N_CELLS, N_DAYS)
     # observed = the planted truth, cached once (every candidate reads it)
     target = normals_for(daily, TRUE_FILL, TRUE_WET).persist()

@@ -107,7 +107,7 @@ def main() -> None:
     from geo_epic_spark.operators.spatial import bbox_join, nearest_grid_join, pip_join
     from geo_epic_spark.session import get_spark
 
-    spark = get_spark(32, "compare")
+    spark = get_spark(os.cpu_count(), "compare")
     imgs = synth.images_meta_df(spark, N_IMG).select("i", "cx", "cy")
     flds = synth.fields_df(spark, N_POLY).select("poly_id", "xs", "ys")
     grid = synth.grid_df(spark, *GRID)
@@ -143,21 +143,22 @@ def main() -> None:
     assert eng_pip_rows == pip_rows, (eng_pip_rows, pip_rows)
     print(json.dumps({
         "n_images": N_IMG,
+        "engine_cpus": os.cpu_count(),
         "pip": {
             "rows": pip_rows,
             "single_node_sec": round(t_pip_single, 2),
-            "engine_local32_sec": round(t_pip_engine, 2),
+            "engine_sec": round(t_pip_engine, 2),
             "speedup": round(t_pip_single / t_pip_engine, 1),
         },
         "bbox_join_engine": {
             "rows": eng_bbox_rows,
-            "engine_local32_sec": round(t_bbox_engine, 2),
+            "engine_sec": round(t_bbox_engine, 2),
             "speedup_vs_single_node_raycast": round(t_pip_single / t_bbox_engine, 1),
         },
         "nearest_grid": {
             "rows": nn_rows,
             "single_node_sec": round(t_nn_single, 2),
-            "engine_local32_sec": round(t_nn_engine, 2),
+            "engine_sec": round(t_nn_engine, 2),
             "speedup": round(t_nn_single / t_nn_engine, 1),
         },
     }))

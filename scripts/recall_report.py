@@ -227,7 +227,7 @@ def report(spark, sf_dir: str) -> list[dict]:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark(os.environ.get("SPARK_GRAFT_CPUS", "32"), "recall-report")
+    spark = get_spark(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()), "recall-report")
     rows = report(spark, sf_dir)
     hdr = f"{'op':<14} {'config':<24} {'truth':>6} {'found':>6} {'recall':>7} {'prec':>6}"
     print(hdr)

@@ -1,6 +1,6 @@
 """North-rule scaling evidence: run the identical tile-assignment job at
-local[8] (N) and local[32] (4N) on the same input and report throughput at
-both plus efficiency = throughput(32) / (4 * throughput(8)).
+local[nproc/4] (N) and local[nproc] (4N) on the same input and report
+throughput at both plus efficiency = throughput(4N) / (4 * throughput(N)).
 
 No real cluster exists in this sandbox; two parallelism levels on the same
 box are the sanctioned stand-in (see BASELINE.md). Each level runs in a
@@ -44,13 +44,15 @@ N_CELLS = int(os.environ.get("SCALING_N_CELLS", "24000000"))
 # pq: Arrow PQ encode + broadcast ADC top-k over N_VECS synthetic 64-dim
 # embeddings — the Pandas-UDF/Arrow kernel class (new r5)
 N_VECS = int(os.environ.get("SCALING_N_VECS", "2000000"))
-# N and 4N parallelism levels. Default 4->16: with 32 physical cores the
-# 8->32 pair saturates the socket's memory bandwidth probing the shared
+# N and 4N parallelism levels, default nproc/4 -> nproc. On a 32-core box the
+# 8->32 pair saturated the socket's memory bandwidth probing the shared
 # broadcast hash table (a single-box artifact a multi-executor cluster does
-# not have — each executor holds its own broadcast copy), so the sanctioned
-# two-level evidence uses the pair that keeps both levels inside the
-# bandwidth envelope. Set SCALING_CPUS=8,32 to measure the saturated pair.
-CPU_LEVELS = tuple(int(x) for x in os.environ.get("SCALING_CPUS", "4,16").split(","))
+# not have — each executor holds its own broadcast copy), so the round-4/5
+# evidence there used SCALING_CPUS=4,16.
+_NPROC = os.cpu_count() or 1
+CPU_LEVELS = tuple(
+    int(x) for x in os.environ.get("SCALING_CPUS", f"{max(1, _NPROC // 4)},{_NPROC}").split(",")
+)
 
 
 def measure(cpus: int) -> dict:
@@ -64,8 +66,6 @@ def measure(cpus: int) -> dict:
         "spark.sql.shuffle.partitions": str(4 * cpus),
         "spark.default.parallelism": str(4 * cpus),
         "spark.locality.wait": "0",
-        # identical heap at both levels so GC headroom is not the variable
-        "spark.driver.memory": "64g",
     })
     if OP == "minhash":
         from geo_epic_spark.operators.dedup import minhash_lsh_pairs
@@ -170,8 +170,8 @@ def main() -> None:
     lo, hi = CPU_LEVELS
     # Default runs the noise-sensitive HIGH level first: ambient bursts on
     # this shared box arrive every few minutes, so the level measured first
-    # gets the freshly-observed quiet window; local[8] leaves 24 idle cores
-    # of headroom and tolerates a burst far better than local[32] does.
+    # gets the freshly-observed quiet window; the low level leaves idle cores
+    # of headroom and tolerates a burst far better than the high level does.
     # SCALING_LO_FIRST=1 restores the historical order.
     order = (lo, hi) if os.environ.get("SCALING_LO_FIRST") else (hi, lo)
     res = {}

@@ -18,10 +18,14 @@ with zipfile.ZipFile('$ZIP', 'w', zipfile.ZIP_DEFLATED) as z:
                 z.write(p, p)
 "
 
-MASTER="${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}"
+MASTER="${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-$(nproc)}]}"
+# default heap: the package's host-sized one (half of physical memory)
+HEAP="${SPARK_DRIVER_MEMORY:-$(python -c "
+from geo_epic_spark.session import DEFAULT_CONF
+print(DEFAULT_CONF['spark.driver.memory'])")}"
 exec spark-submit \
   --master "$MASTER" \
-  --driver-memory "${SPARK_DRIVER_MEMORY:-48g}" \
+  --driver-memory "$HEAP" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.adaptive.skewJoin.enabled=true \
   --conf spark.sql.session.timeZone=UTC \
