@@ -31,6 +31,9 @@ DEFAULT_CONF: dict[str, str] = {
     # at 2000, reps tight; 1000 is past the sweet spot (per-batch overhead).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    # Python workers skip re-reading pyspark.zip, py4j and the spark-core jar
+    # on every task (see worker_daemon's docstring).
+    "spark.python.daemon.module": "geo_epic_spark.worker_daemon",
     # Broadcast dims aggressively; grids/polygon tables are usually << facts.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # Keep shuffle partition count moderate for local runs; AQE coalesces.
