@@ -18,9 +18,9 @@ Output:
     ``value`` and ``value_r4_subset`` are null when any query failed, and the
     process then exits 1, so a broken query never reads as a speed-up.
 
-The north-rule metric (tile-assignment rows/s + N vs 4N scaling efficiency)
-is reported by scripts/scaling.py into BASELINE.md; this file is the per-round
-driver entry point.
+The N vs 4N scaling efficiency comes from scripts/scaling.py, which runs
+perfbench's seeded workloads (BASELINE.md has the numbers); this file is the
+per-round driver entry point.
 """
 
 from __future__ import annotations
@@ -68,8 +68,7 @@ N_IMG = int(os.environ.get("BENCH_N_IMG", "1000000"))
 N_DECODE = 4000
 # kernel-class fixtures (aggregate-scatter, banded-hamming, lexical-retrieval,
 # compressed-ANN), sized so the kernel, not fixed per-job overhead, dominates
-# a timed run; the 1M+/48M-cell points live in scripts/scaling.py +
-# BASELINE.md, not the per-round suite.
+# a timed run.
 N_HAM = 250000
 FOCAL_NR = 1500
 FOCAL_NC = 2000

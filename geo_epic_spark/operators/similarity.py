@@ -488,7 +488,7 @@ def pq_encode_arrow(
     # is compute-dense (BLAS) where the broadcast-subtract form was
     # memory-bandwidth-bound — measured 2x faster AND it scales with cores
     # (the (n, codes, dsub) temporaries saturated the socket's bandwidth at
-    # 16 workers; see BASELINE.md "Round-5 evidence").
+    # 16 workers on a 32-core host).
     c2 = [np.square(cb).sum(1) for cb in cbs]  # ||c||^2 per subspace
 
     def _enc(v):

@@ -439,8 +439,8 @@ def soil_layers_sql(n_cokeys: int, per: int = 6) -> str:
 
 
 # ---------------------------------------------------------------------------
-# synthetic text corpus (scaling evidence for the dedup family: arbitrary-
-# size documents with planted near-duplicate neighbors, pure Column exprs)
+# synthetic text corpus (the bench's bm25 fixture: arbitrary-size documents
+# with planted near-duplicate neighbors, pure Column exprs)
 # ---------------------------------------------------------------------------
 
 def documents_synth_df(

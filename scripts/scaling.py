@@ -1,18 +1,25 @@
-"""North-rule scaling evidence: run the identical tile-assignment job at
-local[nproc/4] (N) and local[nproc] (4N) on the same input and report
-throughput at both plus efficiency = throughput(4N) / (4 * throughput(N)).
+"""North-rule scaling evidence on perfbench's seeded workloads.
 
-No real cluster exists in this sandbox; two parallelism levels on the same
-box are the sanctioned stand-in (see BASELINE.md). Each level runs in a
-FRESH subprocess/JVM (a stopped SparkContext leaves thread pools and codegen
-caches behind that contaminate the second measurement), and the input is
-sized so the job is compute-bound for tens of seconds — fixed overhead
-(session start, broadcast build, Python<->JVM handshakes) must be amortized
-or the measurement reads scheduler noise, not scaling.
+    python scripts/scaling.py
 
-Usage:
-  python scripts/scaling.py            # orchestrate both levels, print JSON
-  python scripts/scaling.py --run 8    # (internal) one measurement
+For each workload (``site_assign``, ``curate``) every op of
+``perfbench.workloads.WORKLOADS`` runs at two parallelism levels,
+local[nproc/4] (N) and local[nproc] (4N), on the same seeded inputs
+(``perfbench.fixtures``).  Each level is a fresh process and JVM: a stopped
+SparkContext leaves thread pools and codegen caches behind that would
+contaminate the next level.  Each op runs once to warm up, then TIMED more
+times; its time is the best of those.  Efficiency is
+throughput(4N) / (4 * throughput(N)), which for the same work is
+t_N / (4 * t_4N).
+
+One JSON line per workload gives each op's seconds at both levels, its
+efficiency and its output digest.  ``pip_join`` and ``nearest_grid_join``
+also report ``single_node_s``: the same join in one numpy process on the
+same parquet, the way the reference computes it.  The exit status is 1 when
+an op's digest differs between runs or levels, or a single-node baseline
+returns a different row count than the engine.
+
+Run nothing else on the host during a measurement.
 """
 
 from __future__ import annotations
@@ -21,192 +28,138 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import numpy as np
+import pandas as pd
 
-N_IMG = int(os.environ.get("SCALING_N_IMG", "24000000"))
-N_POLY = int(os.environ.get("SCALING_N_POLY", "2000"))
-REPEATS = int(os.environ.get("SCALING_REPEATS", "2"))
-# SCALING_OP=pip (default, the flagship tile-assignment join), minhash
-# (the dedup family: minhash+LSH near-dup pairs over a synthetic corpus
-# with planted neighbors — second-operator evidence that the scaling
-# property is engine-wide, not one kernel's), or hamming (the image-axis
-# dedup: banded hamming near-dup over synthetic 64-bit phashes with
-# planted bit-flip twins — pure shuffle-join kernel, no Python stage)
-OP = os.environ.get("SCALING_OP", "pip")
-N_DOCS = int(os.environ.get("SCALING_N_DOCS", "300000"))
-N_HASH = int(os.environ.get("SCALING_N_HASH", "8000000"))
-# focal: single-Exchange scatter/aggregate map algebra over an N_CELLS DEM
-# (nc fixed at 6000 columns) — the shuffle-AGGREGATE kernel class, distinct
-# from the join-bound pip/minhash/hamming evidence
-N_CELLS = int(os.environ.get("SCALING_N_CELLS", "24000000"))
-# pq: Arrow PQ encode + broadcast ADC top-k over N_VECS synthetic 64-dim
-# embeddings — the Pandas-UDF/Arrow kernel class (new r5)
-N_VECS = int(os.environ.get("SCALING_N_VECS", "2000000"))
-# N and 4N parallelism levels, default nproc/4 -> nproc. On a 32-core box the
-# 8->32 pair saturated the socket's memory bandwidth probing the shared
-# broadcast hash table (a single-box artifact a multi-executor cluster does
-# not have — each executor holds its own broadcast copy), so the round-4/5
-# evidence there used SCALING_CPUS=4,16.
-_NPROC = os.cpu_count() or 1
-CPU_LEVELS = tuple(
-    int(x) for x in os.environ.get("SCALING_CPUS", f"{max(1, _NPROC // 4)},{_NPROC}").split(",")
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from geo_epic_spark import cells  # noqa: E402
+from geo_epic_spark.geometry import points_in_polygon  # noqa: E402
+from geo_epic_spark.session import get_spark  # noqa: E402
+from perfbench import fixtures, instrument, workloads  # noqa: E402
+
+SEED = 1
+TIMED = 2
+# Input scale per workload, chosen by measurement so that most ops run 10-30 s
+# at 4N; nearest_grid_join and pq_topk stay under 10 s (BASELINE.md says why).
+SCALE = {"site_assign": 10.0, "curate": 30.0}
 
 
-def measure(cpus: int) -> dict:
-    from geo_epic_spark import synth
-    from geo_epic_spark.operators.spatial import pip_join
-    from geo_epic_spark.session import get_spark
+def single_node_pip(paths: dict) -> int:
+    """Cell-bucket prefilter, then a ray cast of each polygon's candidates."""
+    pts, polys = pd.read_parquet(paths["points"]), pd.read_parquet(paths["polys"])
+    px, py = pts.cx.to_numpy(), pts.cy.to_numpy()
+    cell = cells.np_cell_id(px, py, workloads.PIP_RES)
+    order = np.argsort(cell, kind="stable")
+    cell = cell[order]
+    hits = 0
+    for xs, ys in zip(polys["xs"], polys["ys"]):
+        lo = int(cells.np_cell_id(xs.min(), ys.min(), workloads.PIP_RES))
+        hi = int(cells.np_cell_id(xs.max(), ys.max(), workloads.PIP_RES))
+        # one cell-id range per covering row: [row start, row start + width]
+        width = (hi - lo) % cells._SHIFT
+        ci = np.concatenate([order[np.searchsorted(cell, b):
+                                   np.searchsorted(cell, b + width, "right")]
+                             for b in range(lo, hi + 1, cells._SHIFT)])
+        hits += int(points_in_polygon(px[ci], py[ci], xs, ys).sum())
+    return hits
 
-    spark = get_spark(cpus, f"scaling-{cpus}", extra_conf={
-        # 4 tasks per core: the candidate count per partition varies with
-        # polygon density, so finer tasks smooth stragglers at both levels.
-        "spark.sql.shuffle.partitions": str(4 * cpus),
-        "spark.default.parallelism": str(4 * cpus),
-        "spark.locality.wait": "0",
-    })
-    if OP == "minhash":
-        from geo_epic_spark.operators.dedup import minhash_lsh_pairs
 
-        docs = synth.documents_synth_df(spark, N_DOCS)
+def single_node_nearest(paths: dict) -> int:
+    """Closed-form snap to the regular lattice: what a BallTree nearest
+    query reduces to on a lattice, and the fastest single-node form."""
+    pts, grid = pd.read_parquet(paths["points"]), pd.read_parquet(paths["grid"])
+    sp, nc = fixtures.GRID_SPACING, grid.lon.nunique()
+    nr = len(grid) // nc
+    col = np.clip(np.round((pts.cx.to_numpy() - grid.lon.min()) / sp), 0, nc - 1)
+    row = np.clip(np.round((pts.cy.to_numpy() - grid.lat.min()) / sp), 0, nr - 1)
+    return len(row.astype(np.int64) * nc + col.astype(np.int64))
 
-        def job():
-            return minhash_lsh_pairs(docs, threshold=0.5, num_hashes=64).count()
-    elif OP == "hamming":
-        from pyspark.sql import functions as F
 
-        from geo_epic_spark.operators.dedup import hamming_near_dup_pairs
+SINGLE_NODE = {"pip_join": single_node_pip, "nearest_grid_join": single_node_nearest}
 
-        i = F.col("id")
-        # xxhash64 mixing, not linear-congruential bits: LCG-derived hashes
-        # are adversarially degenerate for block banding (low bits of every
-        # block encode i mod 2^k, so cross-block combos share entropy and
-        # candidates blow up 33x) — real phashes behave like the mixed case
-        h = F.xxhash64(i)
-        base = spark.range(N_HASH).select(i.alias("img_id"), h.alias("phash"))
-        mask = F.expr(
-            "shiftleft(CAST(1 AS BIGINT), CAST(pmod(id * 7, 63) AS INT))"
-            " | shiftleft(CAST(1 AS BIGINT), CAST(pmod(id * 13, 63) AS INT))"
-        )
-        copies = (
-            spark.range(N_HASH).filter("id % 20 = 0")
-            .select((i + F.lit(N_HASH)).alias("img_id"),
-                    h.bitwiseXOR(mask).alias("phash"))
-        )
-        hashes = base.unionAll(copies)
 
-        def job():
-            return hamming_near_dup_pairs(
-                hashes, key="img_id", hash_col="phash", max_hamming=4,
-                expected_n=N_HASH + N_HASH // 20,
-            ).count()
-    elif OP == "focal":
-        from geo_epic_spark.operators.mapalgebra import focal_stats
-
-        nc = 6000
-        nr = N_CELLS // nc
-        dem = synth.elev_grid_df(spark, nr, nc, 0.01)
-
-        def job():
-            return focal_stats(dem, nc=nc, nr=nr, value="elev",
-                               stats=("mean", "count")).count()
-    elif OP == "pq":
-        # Arrow-kernel class (r5): vectorized PQ encode (mapInArrow-style
-        # pandas_udf, the 10^9-row compressed-ANN path) + broadcast ADC
-        # top-k — scaling evidence for the Python/Arrow stage family, which
-        # pays per-batch JVM<->Python transfer the pure-JVM classes don't.
-        import numpy as np
-        from pyspark.sql import functions as F
-
-        from geo_epic_spark.operators.similarity import pq_encode_arrow, pq_topk
-
-        cb = [
-            [[float(x) for x in code] for code in sub]
-            for sub in np.random.Generator(np.random.PCG64(7)).uniform(
-                -1.0, 1.0, (8, 16, 8))
-        ]
-        vecs = synth.embeddings_synth_df(spark, N_VECS)
-        q = (
-            synth.embeddings_synth_df(spark, N_VECS)
-            .filter(F.col("vec_id") % (N_VECS // 8) == 3)
-            .select(F.col("vec_id").alias("q_id"),
-                    F.col("embedding").alias("q_vec"))
-        )
-
-        def job():
-            return pq_topk(pq_encode_arrow(vecs, cb), q, cb, k=10).count()
-    else:
-        imgs = synth.images_meta_df(spark, N_IMG).select("i", "cx", "cy")
-        flds = synth.fields_df(spark, N_POLY).select("poly_id", "xs", "ys")
-
-        def job():
-            return pip_join(imgs, flds, res=0.05, lon="cx", lat="cy").count()
-
-    # warm-up: full-size run primes JVM JIT, codegen cache, broadcast
-    load_pre = round(os.getloadavg()[0], 1)
-    rows = job()
-    reps = []
-    for _ in range(REPEATS):
-        t0 = time.time()
-        job()
-        reps.append(round(time.time() - t0, 2))
+def measure(workload: str, cpus: int, work: str) -> dict:
+    """One level: write the inputs, start local[cpus], time every op."""
+    scale = SCALE[workload]
+    inputs = fixtures.MAKERS[workload](SEED, scale, os.path.join(work, "inputs"))
+    spark = get_spark(cpus, f"scaling-{workload}-{cpus}",
+                      {"spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
+    ctx = workloads.Ctx(spark, workload, SEED, scale, inputs, work,
+                        instrument.Spans(enabled=False))
+    ops = {}
+    for op in workloads.WORKLOADS[workload]:
+        secs, digests = [], []
+        for _ in range(1 + TIMED):
+            t0 = time.perf_counter()
+            digests.append(list(op.run(ctx)))
+            secs.append(time.perf_counter() - t0)
+        ops[op.name] = {"s": min(secs[1:]), "digests": digests}
     spark.stop()
-    # ambient-noise witnesses per level: load BEFORE this level's JVM started
-    # is the neighbors' contribution (our own threads inflate it after), and
-    # the per-rep spread catches bursts that arrive MID-run — on a quiet box
-    # consecutive reps of this compute-bound job agree within a few percent,
-    # so max/min >> 1 marks the level as contaminated even when load_pre was
-    # low when it launched.
-    return {"cpus": cpus, "sec": min(reps), "reps": reps, "result_rows": rows,
-            "load_pre": load_pre}
+    return {"paths": inputs.paths, "ops": ops}
 
 
-def main() -> None:
-    if len(sys.argv) > 2 and sys.argv[1] == "--run":
-        print("RESULT " + json.dumps(measure(int(sys.argv[2]))))
-        return
-    lo, hi = CPU_LEVELS
-    # Default runs the noise-sensitive HIGH level first: ambient bursts on
-    # this shared box arrive every few minutes, so the level measured first
-    # gets the freshly-observed quiet window; the low level leaves idle cores
-    # of headroom and tolerates a burst far better than the high level does.
-    # SCALING_LO_FIRST=1 restores the historical order.
-    order = (lo, hi) if os.environ.get("SCALING_LO_FIRST") else (hi, lo)
-    res = {}
-    for cpus in order:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--run", str(cpus)],
-            capture_output=True, text=True, check=True,
-        )
-        line = [l for l in out.stdout.splitlines() if l.startswith("RESULT ")][-1]
-        res[cpus] = json.loads(line[len("RESULT "):])
-    n_rows = {"minhash": N_DOCS, "hamming": N_HASH, "focal": N_CELLS,
-              "pq": N_VECS}.get(OP, N_IMG)
-    thr_lo = n_rows / res[lo]["sec"]
-    thr_hi = n_rows / res[hi]["sec"]
-    eff = thr_hi / ((hi / lo) * thr_lo)
-    print(json.dumps({
-        "job": {"minhash": "minhash_lsh_pairs (dedup)",
-                "hamming": "hamming_near_dup_pairs (image dedup)",
-                "focal": "focal_stats (scatter/aggregate map algebra)",
-                "pq": "pq_encode_arrow + pq_topk (Arrow ANN)"}.get(
-                    OP, "tile_assign (PIP join)"),
-        "n_images": n_rows,
-        "n_polys": N_POLY,
-        "result_rows": res[hi]["result_rows"],
-        f"sec_local{lo}": round(res[lo]["sec"], 2),
-        f"sec_local{hi}": round(res[hi]["sec"], 2),
-        f"rows_per_sec_local{lo}": round(thr_lo),
-        f"rows_per_sec_local{hi}": round(thr_hi),
-        f"scaling_efficiency_{lo}_to_{hi}": round(eff, 3),
-        f"load_pre_local{lo}": res[lo]["load_pre"],
-        f"load_pre_local{hi}": res[hi]["load_pre"],
-        f"reps_local{lo}": res[lo]["reps"],
-        f"reps_local{hi}": res[hi]["reps"],
-    }))
+def efficiency(t_n: float, t_4n: float, ratio: float) -> float:
+    """throughput(4N) / (ratio * throughput(N)) for the same work."""
+    return t_n / (ratio * t_4n)
+
+
+def summarize(levels: dict[int, dict]) -> tuple[dict, bool]:
+    """Per op: seconds at both levels, efficiency and digest.  False when
+    an op's digests are not all equal."""
+    lo, hi = sorted(levels)
+    out, ok = {}, True
+    for name, a in levels[lo]["ops"].items():
+        b = levels[hi]["ops"][name]
+        digests = sorted({tuple(d) for d in a["digests"] + b["digests"]})
+        ok &= len(digests) == 1
+        out[name] = {f"local{lo}_s": round(a["s"], 3), f"local{hi}_s": round(b["s"], 3),
+                     "efficiency": round(efficiency(a["s"], b["s"], hi / lo), 3),
+                     "digest": digests[0] if len(digests) == 1 else digests}
+    return out, ok
+
+
+def run_workload(workload: str, cpu_levels: tuple[int, int]) -> bool:
+    t0 = time.perf_counter()
+    with tempfile.TemporaryDirectory(prefix=f"scaling-{workload}-") as work:
+        levels = {}
+        for cpus in cpu_levels:
+            # from the repo root, so the Python workers that Spark starts with
+            # ``python -m geo_epic_spark.worker_daemon`` import the package
+            out = subprocess.run([sys.executable, os.path.abspath(__file__), "--run",
+                                  workload, str(cpus), work],
+                                 stdout=subprocess.PIPE, text=True, cwd=ROOT, check=True)
+            line = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT ")][-1]
+            levels[cpus] = json.loads(line[len("RESULT "):])
+        ops, ok = summarize(levels)
+        for name, baseline in SINGLE_NODE.items():
+            if name in ops:
+                t1 = time.perf_counter()
+                rows = baseline(levels[cpu_levels[0]]["paths"])
+                ops[name].update(single_node_s=round(time.perf_counter() - t1, 3),
+                                 single_node_rows=rows)
+                ok &= rows == levels[cpu_levels[0]]["ops"][name]["digests"][0][0]
+    print(json.dumps({"workload": workload, "scale": SCALE[workload], "seed": SEED,
+                      "levels": list(cpu_levels), "ok": ok, "ops": ops,
+                      "wall_s": round(time.perf_counter() - t0, 1)}), flush=True)
+    return ok
+
+
+def main() -> int:
+    if sys.argv[1:2] == ["--run"]:
+        workload, cpus, work = sys.argv[2], int(sys.argv[3]), sys.argv[4]
+        print("RESULT " + json.dumps(measure(workload, cpus, work)))
+        return 0
+    nproc = os.cpu_count() or 1
+    levels = (max(1, nproc // 4), nproc)
+    results = [run_workload(w, levels) for w in fixtures.MAKERS]
+    return 0 if all(results) else 1
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

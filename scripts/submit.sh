@@ -19,16 +19,19 @@ with zipfile.ZipFile('$ZIP', 'w', zipfile.ZIP_DEFLATED) as z:
 "
 
 MASTER="${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-$(nproc)}]}"
-# default heap: the package's host-sized one (half of physical memory)
-HEAP="${SPARK_DRIVER_MEMORY:-$(python -c "
+# every --conf from the package defaults (session.DEFAULT_CONF), heap included;
+# the master stays the --master flag above
+CONF_LINES="$(python -c "
 from geo_epic_spark.session import DEFAULT_CONF
-print(DEFAULT_CONF['spark.driver.memory'])")}"
+for k, v in DEFAULT_CONF.items():
+    print('--conf', f'{k}={v}', sep='\\n')")"
+mapfile -t CONF <<< "$CONF_LINES"
+# Spark starts its Python workers with python -m geo_epic_spark.worker_daemon
+# before any --py-files zip is on sys.path, so the zip goes on PYTHONPATH too
+export PYTHONPATH="$ZIP${PYTHONPATH:+:$PYTHONPATH}"
 exec spark-submit \
   --master "$MASTER" \
-  --driver-memory "$HEAP" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.adaptive.skewJoin.enabled=true \
-  --conf spark.sql.session.timeZone=UTC \
+  "${CONF[@]}" \
   --py-files "$ZIP" \
   ${SPARK_SUBMIT_OPTS_EXTRA:-} \
   scripts/submit_job.py "$@"

@@ -1,8 +1,9 @@
 """spark-submit entry point for the flagship tile-assignment pipeline.
 
 North-rule launch path: the engine ships as a --py-files zip; this script is
-the application. On a real cluster the master/executors come from
-spark-submit flags; defaults below only apply when none are given.
+the application. The master, the executors and every setting come from
+spark-submit: submit.sh passes the package's session.DEFAULT_CONF as --conf
+flags, so this session runs under the same conf as get_spark's.
 
   scripts/submit.sh [n_images] [n_polys] [out_dir]   # packages + submits
 
@@ -28,6 +29,7 @@ def main() -> None:
     n_polys = int(sys.argv[2]) if len(sys.argv) > 2 else 2000
     out_dir = sys.argv[3] if len(sys.argv) > 3 else "/tmp/geo_epic_submit_out"
 
+    # master and conf from spark-submit, not get_spark's local[...]
     spark = SparkSession.builder.appName("geo-epic-tile-assign").getOrCreate()
     # engine modules come from --py-files
     from geo_epic_spark import synth
