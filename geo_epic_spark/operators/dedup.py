@@ -76,14 +76,24 @@ def _bucket_self_join(
     )
 
 
+def _last_start(words: F.Column, n: int) -> F.Column:
+    """0-based start of a doc's last word n-gram; a doc shorter than ``n``
+    words is one gram of all its words."""
+    return F.greatest(F.size(words) - n, F.lit(0))
+
+
+def _gram(words: F.Column, i: F.Column, n: int) -> F.Column:
+    """Text of the word n-gram starting at 0-based position ``i``: the one
+    shingle definition ``shingles()`` and the minhash per-doc stage share."""
+    return F.concat_ws(" ", F.slice(words, i + 1, n))
+
+
 def shingles(df: DataFrame, text: str = "text", n: int = 3) -> DataFrame:
     """Word n-gram shingle set per doc: (key cols..., shingle string).
     Built-ins only: split -> slide -> explode -> distinct."""
     words = F.split(F.col(text), r"\s+")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-    )
+    grams = F.transform(F.sequence(F.lit(0), _last_start(words, n)),
+                        lambda i: _gram(words, i, n))
     return df.withColumn("shingle", F.explode(F.array_distinct(grams)))
 
 
@@ -176,8 +186,9 @@ def minhash_lsh_pairs(
     partitioned — at scale the extra full-text shuffle is pure cost.
 
     Each doc's shingle-id set and all ``num_hashes`` permutation minima are
-    computed in one map-only stage (JVM gram/hash Columns + one vectorized
-    numpy pass per Arrow batch), so nothing shuffles before the band join.
+    computed in one map-only stage (codegen'd JVM rows of one gram id each
+    + one vectorized numpy pass per Arrow batch), so nothing shuffles before
+    the band join.
     """
     if bands is None:
         bands = bands_for_threshold(threshold, num_hashes)
@@ -187,13 +198,37 @@ def minhash_lsh_pairs(
     return _verify_candidates(per_doc, banded, key, threshold)
 
 
+def _gram_ids(df: DataFrame, key: str, text: str, n: int) -> DataFrame:
+    """One ``(key, __pos, __id)`` row per word n-gram of each doc, in doc
+    order: ``__id`` is ``xxhash64`` of the ``_gram`` text at 0-based start
+    ``__pos``, and a null text shingles like ``""``. Holds no lambda, so the
+    whole stage runs in whole-stage codegen. ``posexplode_outer`` rather
+    than ``posexplode``: Catalyst infers a ``size(words) > 0`` filter for
+    the inner form and so runs the regex split twice per doc (about 30% of
+    this stage on 80k captions, local[2] on 4 cores); split never returns
+    an empty array, so both emit the same rows."""
+    words = F.col("__w")
+    return (
+        df.select(key, F.split(F.coalesce(F.col(text), F.lit("")), r"\s+").alias("__w"))
+        .select(key, "__w", F.posexplode_outer("__w").alias("__pos", "__word"))
+        .filter(F.col("__pos") <= _last_start(words, n))
+        .select(key, "__pos", F.xxhash64(_gram(words, F.col("__pos"), n)).alias("__id"))
+    )
+
+
 def _arrow_per_doc_bands(
     df: DataFrame, key: str, text: str, n: int, num_hashes: int, bands: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Map-only per-doc stage of ``minhash_lsh_pairs``: word-gram
-    shingle ids (JVM Columns, identical construction to ``shingles()`` +
-    ``_shingle_id``) and the banded minhash bucket hashes (one vectorized
-    numpy pass per Arrow batch). No shuffle anywhere in this stage."""
+    """Map-only per-doc stage of ``minhash_lsh_pairs``: each doc's shingle
+    ids and its banded minhash bucket hashes. No shuffle anywhere in it.
+
+    The JVM side emits ``_gram_ids``' one row per word n-gram, in codegen:
+    a ``transform`` over a gram array would be a CodegenFallback that
+    evaluates each element interpreted. The numpy kernel groups the rows
+    back into docs: a doc starts at each ``__pos == 0`` row (two adjacent
+    docs with the same key stay two docs), dedupes its ids, and takes the
+    permutation minima and band hashes in one vectorized pass per Arrow
+    batch. Each doc's ``__ids`` holds its distinct ids in ascending order."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType, StructField, StructType
@@ -202,16 +237,6 @@ def _arrow_per_doc_bands(
     rng_a, rng_b = _perm_constants(num_hashes)
     a_np = np.array(rng_a, dtype=np.int64)
     b_np = np.array(rng_b, dtype=np.int64)
-
-    words = F.split(F.col(text), r"\s+")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-    )
-    d = df.select(
-        key,
-        F.transform(F.array_distinct(grams), lambda g: F.xxhash64(g)).alias("__ids"),
-    )
 
     out_schema = StructType([
         StructField(key, LongType()),
@@ -227,51 +252,66 @@ def _arrow_per_doc_bands(
     fnv_prime = np.int64(1099511628211)
 
     # whole-batch vectorization: every batch does ONE flat pass — ids
-    # concatenated, permutations applied in cache-sized column chunks, and
-    # the per-doc minima taken with a segment-min (minimum.reduceat over the
-    # doc offsets) — never a per-document Python loop. The minima equal a
-    # plain numpy (a_j * h + b_j) mod P reference (pinned in
-    # test_dedup_text).
-    _PERM_CHUNK = 16  # (n_ids x chunk) temp ~50 MB at the 10k-row batch default
+    # deduped per doc with one lexsort, permutations applied in cache-sized
+    # column chunks, and the per-doc minima taken with a segment-min
+    # (minimum.reduceat over the doc offsets) — never a per-document Python
+    # loop. The minima equal a plain numpy (a_j * h + b_j) mod P reference
+    # (pinned in test_dedup_text).
+    # (n_grams x chunk) int64 temp: 256 KB at the package's 2048-row Arrow
+    # batch, whose rows are grams here, plus the doc carried from the last one
+    _PERM_CHUNK = 16
+
+    def doc_bands(keys, pos, ids):
+        """Bands of whole docs: the rows start at a ``pos == 0`` row."""
+        starts = pos == 0
+        doc = np.cumsum(starts) - 1
+        order = np.lexsort((ids, doc))
+        doc, ids = doc[order], ids[order]
+        first = np.ones(len(ids), dtype=bool)  # first row of its doc
+        np.not_equal(doc[1:], doc[:-1], out=first[1:])
+        keep = first.copy()
+        keep[1:] |= ids[1:] != ids[:-1]
+        ids, offsets = ids[keep], np.flatnonzero(first[keep])
+        h = ids % _P
+        ndocs = len(offsets)
+        sig = np.empty((ndocs, num_hashes), dtype=np.int64)
+        for j0 in range(0, num_hashes, _PERM_CHUNK):
+            m = (h[:, None] * a_np[None, j0:j0 + _PERM_CHUNK]
+                 + b_np[None, j0:j0 + _PERM_CHUNK]) % _P
+            sig[:, j0:j0 + _PERM_CHUNK] = np.minimum.reduceat(m, offsets, axis=0)
+        bmat = sig.reshape(ndocs, bands, rows)
+        acc = np.full((ndocs, bands), fnv_off, dtype=np.int64)
+        with np.errstate(over="ignore"):
+            for r in range(rows):
+                acc = np.multiply(acc ^ bmat[:, :, r], fnv_prime)
+        return pd.DataFrame({key: keys[starts], "__ids": np.split(ids, offsets[1:]),
+                             "__bands": list(acc)})
 
     def sig_fn(batches):
+        # a doc's grams are contiguous but may span Arrow batches: the last,
+        # possibly unfinished doc of each batch waits for the next one
+        pending = []
         for pdf in batches:
-            ids_list = pdf["__ids"]
-            ndocs = len(ids_list)
-            if ndocs == 0:
-                yield pd.DataFrame({key: pdf[key], "__ids": ids_list,
-                                    "__bands": []})
+            if pdf.empty:
                 continue
-            lens = np.fromiter((len(x) for x in ids_list), dtype=np.int64,
-                               count=ndocs)
-            # every doc has >= 1 shingle (the gram builder emits at least one
-            # gram, array_distinct keeps >= 1), which reduceat requires —
-            # zero-length segments would silently read the next doc's minima
-            if not lens.all():
-                raise ValueError("minhash: document with zero shingles")
-            flat = np.concatenate([np.asarray(x, dtype=np.int64) for x in ids_list])
-            h = flat % _P
-            offsets = np.zeros(ndocs, dtype=np.int64)
-            np.cumsum(lens[:-1], out=offsets[1:])
-            sig = np.empty((ndocs, num_hashes), dtype=np.int64)
-            for j0 in range(0, num_hashes, _PERM_CHUNK):
-                m = (h[:, None] * a_np[None, j0:j0 + _PERM_CHUNK]
-                     + b_np[None, j0:j0 + _PERM_CHUNK]) % _P
-                sig[:, j0:j0 + _PERM_CHUNK] = np.minimum.reduceat(m, offsets, axis=0)
-            bmat = sig.reshape(ndocs, bands, rows)
-            acc = np.full((ndocs, bands), fnv_off, dtype=np.int64)
-            with np.errstate(over="ignore"):
-                for r in range(rows):
-                    acc = np.multiply(acc ^ bmat[:, :, r], fnv_prime)
-            yield pd.DataFrame(
-                {key: pdf[key], "__ids": ids_list, "__bands": list(acc)}
-            )
+            cols = [pdf[c].to_numpy() for c in (key, "__pos", "__id")]
+            starts = np.flatnonzero(cols[1] == 0)
+            if not len(starts):
+                pending.append(cols)
+                continue
+            done = pending + [[c[:starts[-1]] for c in cols]]
+            pending = [[c[starts[-1]:] for c in cols]]
+            if starts[-1] or len(done) > 1:
+                yield doc_bands(*(np.concatenate(c) for c in zip(*done)))
+        if pending:
+            yield doc_bands(*(np.concatenate(c) for c in zip(*pending)))
 
     # per_doc feeds three branches (the band join and both verify sides):
     # localCheckpoint computes it once, and unlike persist() its blocks are
     # freed by the ContextCleaner once the returned DataFrame is garbage-
     # collected, so repeated calls in a long session leak no cache entries
-    per_doc = d.mapInPandas(sig_fn, schema=out_schema).localCheckpoint(eager=False)
+    per_doc = (_gram_ids(df, key, text, n).mapInPandas(sig_fn, schema=out_schema)
+               .localCheckpoint(eager=False))
     banded = per_doc.select(key, F.posexplode("__bands").alias("band", "bhash"))
     return per_doc, banded
 

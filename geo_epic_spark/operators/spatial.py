@@ -10,7 +10,9 @@ intersection (`geoEpic/soil/sda.py:59-100`) and zonal statistics
   2. a cell equi-join produces candidates (broadcast when one side is small;
      salting + AQE handle dense-cell skew),
   3. a ray-cast fold inside the join condition refines candidates (exact
-     PIP, JVM codegen) or a window ranks candidates by distance (kNN).
+     PIP, JVM-side but interpreted: ``aggregate`` is a CodegenFallback, so
+     the probing join runs outside whole-stage codegen) or a window ranks
+     candidates by distance (kNN).
 
 At 100 TB the expensive part is the shuffle of the big side, which happens
 exactly once on the cell key; the polygon/grid side is broadcast or
@@ -35,8 +37,12 @@ def pip_expr(px: Column, py: Column, xs: Column, ys: Column) -> Column:
     """Ray-cast point-in-polygon as a pure Column expression — a boolean-XOR
     fold over the polygon edges via ``aggregate`` (higher-order function).
 
-    Stays entirely JVM-side (whole-stage codegen), so the PIP refine adds no
-    Python/Arrow hop to the candidate stream. Semantics identical to
+    Stays entirely JVM-side, so the PIP refine adds no Python/Arrow hop to
+    the candidate stream. It is NOT codegen'd: ``ArrayAggregate`` is a
+    CodegenFallback, so any operator holding this expression (here the
+    broadcast hash join whose condition it sits in) runs outside
+    whole-stage codegen and evaluates the fold per edge, interpreted.
+    Semantics identical to
     geometry.points_in_polygon (half-open edges). Horizontal edges are safe:
     the crossing test's first clause is false when ys[i] == ys[j], which
     blankets the NaN the 0/0 slope would produce.
@@ -106,8 +112,10 @@ def pip_join(
     → equi-join on cell (broadcast if small) → exact ray-cast refine. A
     (point, polygon) candidate appears exactly once because a point has
     exactly one cell, so no post-join dedup is needed. The refine is
-    ``pip_expr``, a higher-order-function fold inside the join condition,
-    so it stays in whole-stage codegen.
+    ``pip_expr``, a higher-order-function fold inside the join condition.
+    The fold is a CodegenFallback, so the BroadcastHashJoin itself runs
+    outside whole-stage codegen (no ``*(n)`` prefix in the executed plan,
+    while its probe-side Project is codegen'd).
     """
     keep = keep_poly_cols or []
     poly_cells = polys.select(
@@ -130,8 +138,8 @@ def pip_join(
     # evaluates it while probing, so non-matching candidates never
     # materialize rows carrying the polygon vertex arrays (measurably
     # less memory traffic than join-then-filter at high core counts).
-    # Conjunct order matters: codegen short-circuits left-to-right, so
-    # the bbox compares cull candidates before the HOF fold runs.
+    # Conjunct order matters: the condition short-circuits left-to-right,
+    # so the bbox compares cull candidates before the HOF fold runs.
     cond = (
         (pts["__cell"] == poly_cells["__cell"])
         & (pts[lon] >= poly_cells["__bx0"]) & (pts[lon] <= poly_cells["__bx1"])
@@ -227,9 +235,13 @@ def _nearest_k(cand: DataFrame, point_cols: list[str], key_cols: list[str],
     """Per-point top-k of the ``(__gid, __d)`` candidates, ties broken by
     (distance, grid id): point columns + ``__gid``, ``__rk``, ``__d``."""
     if k == 1:
-        # min_by gets map-side partial aggregation (one surviving row per
-        # point per input partition) instead of the full candidate shuffle a
-        # row_number window needs.
+        # min_by over structs aggregates map-side before the shuffle (one
+        # surviving row per point per input partition) instead of the full
+        # candidate shuffle a row_number window needs. Its struct buffers
+        # are not hash-eligible, so both halves plan as a SortAggregate: the
+        # partial one sorts every candidate map-side (~1M on site_assign).
+        # A hash-eligible min_by(gid, d) is faster but breaks the
+        # (distance, grid id) tie rule; see ROADMAP.
         best = cand.groupBy(*[F.col(c) for c in point_cols]).agg(
             F.min_by(
                 F.struct(F.col("__gid"), F.col("__d")),

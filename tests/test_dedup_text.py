@@ -573,6 +573,71 @@ def test_minhash_signature_paths_identical(spark):
     assert got == want and len(want) > 0
 
 
+# null, empty, whitespace-only, padded, shorter than a gram, tabs and double
+# spaces, a repeated gram; then two adjacent rows with the same key, and one
+# doc of 3,000 words (more grams than the default 2048-row Arrow batch)
+EDGE_DOCS = [None, "", "   ", " a b c ", "a", "a b", "x\ty  z\t\tw q",
+             "p q r p q r p q r", "a b c d e"]
+EDGE_ROWS = ([(10 + i, t) for i, t in enumerate(EDGE_DOCS)]
+             + [(30, "s t u v"), (30, "w x y z u")]
+             + [(40, " ".join(f"w{i % 997}" for i in range(3000)))])
+
+
+def _fnv_bands(ids: set, num_hashes: int, bands: int) -> list[int]:
+    """Plain-Python minhash band hashes: per-permutation minima of
+    (a_j * (id mod P) + b_j) mod P, each band's minima folded FNV-1a style
+    in unsigned 64-bit arithmetic, read back as signed."""
+    from geo_epic_spark.operators.dedup import _P, _perm_constants
+
+    a, b = _perm_constants(num_hashes)
+    sig = [min((aj * (i % _P) + bj) % _P for i in ids) for aj, bj in zip(a, b)]
+    rows, mask, out = num_hashes // bands, (1 << 64) - 1, []
+    for band in range(bands):
+        acc = 0xcbf29ce484222325
+        for m in sig[band * rows:(band + 1) * rows]:
+            acc = ((acc ^ m) * 1099511628211) & mask
+        out.append(acc - (1 << 64) if acc >> 63 else acc)
+    return out
+
+
+@pytest.mark.parametrize("batch", ["7", None])
+def test_minhash_per_doc_edge_documents(spark, batch):
+    """The per-doc stage groups gram rows back into docs across Arrow
+    batches: every doc's id set equals shingles() + xxhash64 over the same
+    row (null text shingles like ""), same-key neighbours stay two docs,
+    and the bands equal a plain-Python minhash + FNV reference."""
+    from collections import defaultdict
+
+    from geo_epic_spark.operators.dedup import _arrow_per_doc_bands, shingles
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    if batch:
+        spark.conf.set(conf, batch)
+    try:
+        df = spark.createDataFrame(EDGE_ROWS, "doc_id long, text string").coalesce(1)
+        per_doc, _ = _arrow_per_doc_bands(df, "doc_id", "text", 3, 16, 8)
+        got = defaultdict(list)
+        for r in per_doc.collect():
+            got[r.doc_id].append((frozenset(r["__ids"]), len(r["__ids"]), r["__bands"]))
+    finally:
+        spark.conf.set(conf, prev)
+
+    rows = spark.createDataFrame(
+        [(i, k, t) for i, (k, t) in enumerate(EDGE_ROWS)], "row long, doc_id long, text string")
+    ref = defaultdict(set)
+    for r in shingles(rows).select(
+            "row", "doc_id", F.xxhash64("shingle").alias("id")).collect():
+        ref[(r.row, r.doc_id)].add(r.id)
+    want = defaultdict(list)
+    for (_, k), ids in ref.items():
+        want[k].append((frozenset(ids), len(ids), _fnv_bands(ids, 16, 8)))
+    assert len(want[30]) == 2 and len(ref) == len(EDGE_ROWS)
+    (empty,) = spark.range(1).select(F.xxhash64(F.lit("")).alias("h")).collect()
+    assert ref[(0, 10)] == {empty.h}  # the null text
+    assert {k: sorted(v) for k, v in got.items()} == {k: sorted(v) for k, v in want.items()}
+
+
 def test_documents_synth_corpus(spark):
     """Scaling-corpus generator: every dup_every-th doc is a planted
     near-duplicate of its predecessor (exactly one word jittered), all

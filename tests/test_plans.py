@@ -10,6 +10,7 @@
 - AQE: a shuffled join splits the planted hot cell
 - window top-k: WindowGroupLimit trims map-side before the exchange
 - dedup's bucketed self-joins: shuffled hash join, never broadcast
+- minhash's per-gram id rows: a codegen'd posexplode, no lambda
 - PQ/IVF constants: the codebook is one folded Literal, and the py4j calls
   that build pq_topk, pq_encode and ivf_assign do not grow with its size
 """
@@ -258,6 +259,24 @@ def test_bucket_self_join_is_shuffled(spark, op):
     assert pair_joins == ["ShuffledHashJoin"], plan
     if len(joins) == 1:
         assert not has_broadcast_hash_join(out), plan
+
+
+def test_minhash_gram_rows_are_codegen_posexplode(spark):
+    """minhash's per-gram id rows come from a posexplode with no lambda in
+    the plan: a transform lambda is a CodegenFallback, evaluated per element
+    outside whole-stage codegen. The Generate runs inside a codegen stage."""
+    import re
+
+    from geo_epic_spark.operators.dedup import _gram_ids
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, None)], "doc_id long, text string")
+    rows = _gram_ids(docs, "doc_id", "text", 3)
+    plan = formatted_plan(rows)
+    assert "posexplode" in plan and "lambdafunction" not in plan, plan
+    rows.collect()
+    executed = rows._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert re.search(r"\*\(\d+\) Generate posexplode", executed), executed
 
 
 def _codebook(shape: tuple[int, ...]) -> list:
