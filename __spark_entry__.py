@@ -2318,11 +2318,11 @@ def _sql_winnow_fingerprints() -> str:
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup pipeline completion: near-dup PAIRS -> CLUSTERS (connected
-    components via min-label propagation) -> every doc labeled with the
-    smallest reachable doc_id (singletons label themselves; canonical keep =
-    cluster_id == doc_id). Oracle = transitive closure as a DuckDB recursive
-    CTE over the exact Jaccard pair set (== the LSH pair set on this corpus,
-    proven by q_minhash_lsh)."""
+    components via large-star/small-star contraction) -> every doc labeled
+    with the smallest reachable doc_id (singletons label themselves;
+    canonical keep = cluster_id == doc_id). Oracle = transitive closure as
+    a DuckDB recursive CTE over the exact Jaccard pair set (== the LSH pair
+    set on this corpus, proven by q_minhash_lsh)."""
     from geo_epic_spark.operators.dedup import cluster_pairs
 
     d = _t(spark, sf_dir, "documents")
@@ -4897,8 +4897,7 @@ def q_density_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = synth.images_meta_df(spark, N_IMG).select(
         F.col("i").alias("point_id"), "cx", "cy")
-    return density_cluster(
-        pts, res=0.02, min_pts=6, lon="cx", lat="cy", algorithm="star")
+    return density_cluster(pts, res=0.02, min_pts=6, lon="cx", lat="cy")
 
 
 def _sql_density_cluster() -> str:

@@ -24,7 +24,6 @@ from geo_epic_spark.operators.relational import (  # noqa: F401
     depth_bucket_median,
     dominant_component,
     opc_append,
-    resume_filter,
     soil_projection,
 )
 from geo_epic_spark.operators.resume import (  # noqa: F401

@@ -14,7 +14,6 @@ buckets (boilerplate text clusters are the dense-cell analog).
 
 from __future__ import annotations
 
-import warnings
 from collections.abc import Sequence
 from functools import reduce
 from operator import and_
@@ -674,145 +673,71 @@ def cluster_pairs(
     key: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 10,
-    algorithm: str = "label",
 ) -> DataFrame:
     """Group near-duplicate pairs into clusters (connected components):
     every document gets ``cluster_id`` = the smallest key reachable through
     the pair graph (singletons keep their own key). The canonical-keep rule
     is then one filter: ``cluster_id == key``.
 
-    ``algorithm='label'`` (default): minimum-label propagation — labels
-    start as the node id and each round takes the min over neighbors'
-    labels; converged when a round changes nothing (one cheap count per
-    round). Near-duplicate clusters are dense (duplicates of one source
-    form near-cliques, diameter <= ~3), so propagation converges in 2-4
-    rounds regardless of corpus size. Rounds needed grow with graph
-    DIAMETER, so when ``max_iter`` rounds don't converge the loop doubles
-    its budget (each extra round is one cheap join on an already-stable
-    frontier) up to 8x before raising — it never silently returns
-    unconverged labels (r2 advisory finding).
+    Alternating large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014): O(log n)
+    rounds on any graph shape, chains included. Edges stay oriented
+    high→low (u > v). large-star links every node's strictly-larger
+    neighbors to m = min(N(u) ∪ {u}); small-star links every node's smaller
+    neighbors, and the node itself, to the smallest of them. Each round is
+    groupBy-mins and equi-joins over the edge list, with a lazy
+    localCheckpoint so the plan never grows with the round count.
 
-    ``algorithm='star'``: alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log n) rounds even on chain-shaped graphs where label
-    propagation needs O(diameter). The right choice at 10^12 rows when the
-    pair graph's shape is unknown. Each round is one groupBy-min over the
-    (symmetric) edge list + an equi-join — no all-pairs anywhere.
+    The loop stops once the edges form a star forest: every source has one
+    target and no target is also a source. Each star's center is then its
+    component's minimum, so the edge list is the label table. Both
+    conditions are needed: with the second alone, a source still linked to
+    two roots would stop the loop early. The test is one job per round.
     """
-    if algorithm == "star":
-        return _cluster_pairs_star(df, pairs, key, id_a, id_b)
-    edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .unionByName(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = df.select(F.col(key).alias("a"), F.col(key).alias("lbl"))
-    budget = max_iter
-    rounds = 0
-    converged = False
-    while not converged:
-        neigh = (
-            edges.join(labels.withColumnRenamed("a", "b2"), edges["b"] == F.col("b2"))
-            .groupBy("a")
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        new_labels = (
-            labels.join(neigh, "a", "left")
-            .select("a", F.least(F.col("lbl"), F.coalesce("nlbl", "lbl")).alias("lbl"))
-            # per-ROUND lineage truncation (r3 advisory): the `changed`
-            # count below materializes this lazy checkpoint every round, so
-            # the analyzed plan is always <= 2 joins deep — an 80-round
-            # budget-extended run on a high-diameter graph never hands
-            # Catalyst an 80-join lineage (test_cluster_pairs_chain_budget
-            # drives that path end-to-end)
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "a")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        rounds += 1
-        converged = changed == 0
-        if not converged and rounds >= budget:
-            if budget >= max_iter * 8:
-                raise RuntimeError(
-                    f"cluster_pairs: label propagation not converged after "
-                    f"{rounds} rounds (graph diameter > {rounds}); use "
-                    f"algorithm='star' for chain-shaped pair graphs"
-                )
-            budget *= 2
-            warnings.warn(
-                f"cluster_pairs: not converged after {rounds} rounds; "
-                f"extending budget to {budget} (high-diameter pair graph — "
-                f"consider algorithm='star')",
-                stacklevel=2,
-            )
-    return labels.select(F.col("a").alias(key), F.col("lbl").alias("cluster_id"))
-
-
-def _cluster_pairs_star(
-    df: DataFrame, pairs: DataFrame, key: str, id_a: str, id_b: str
-) -> DataFrame:
-    """Alternating large-star/small-star connected components.
-
-    large-star: every node u links its strictly-larger neighbors to
-    m = min(N(u) ∪ {u}).  small-star: edges oriented high→low, every node u
-    links its small neighbors (and itself) to m.  Alternate until the edge
-    set is stable — at fixpoint the edges form stars rooted at each
-    component's minimum, so the label read-off is one groupBy-min. Round
-    count is O(log n) on ANY graph shape (the paper's bound), which is what
-    a 10^12-row corpus with unknown duplicate topology needs.
-    """
-    # symmetric edge list, self-loops dropped
     e = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        pairs.select(
+            F.greatest(id_a, id_b).alias("u"), F.least(id_a, id_b).alias("v")
+        )
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint(eager=False)
     )
     for _ in range(64):  # paper bound is O(log n); 64 covers any real input
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        # large-star: m over ALL neighbors; re-link strictly larger ones
+        # large-star: m over ALL neighbors; re-link strictly larger ones.
+        # v > u >= m, so the output is already oriented high→low
         lmin = sym.groupBy("u").agg(F.min("v").alias("mv"))
         lmin = lmin.select("u", F.least("mv", "u").alias("m"))
         large = (
             sym.join(lmin, "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        # small-star: orient high→low, m over small neighbors ∪ self
-        lo = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        smin = lo.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            lo.join(smin, "u")
+        # small-star: m over small neighbors ∪ self
+        smin = large.groupBy("u").agg(F.min("v").alias("m"))
+        e = (
+            large.join(smin, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(smin.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
             .localCheckpoint(eager=False)
         )
-        changed = (
-            small.exceptAll(e).limit(1).count() + e.exceptAll(small).limit(1).count()
+        multi = (
+            e.groupBy("u")
+            .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+            .filter(F.col("lo") != F.col("hi"))
+            .select("u")
         )
-        e = small
-        if changed == 0:
+        chained = e.join(e.select(F.col("u").alias("v")), "v", "left_semi")
+        if multi.unionByName(chained.select("u")).limit(1).count() == 0:
             break
     else:
-        raise RuntimeError("cluster_pairs(star): edge set not stable after 64 rounds")
-    # at fixpoint every non-root node has exactly one edge u -> component min
-    roots = e.groupBy("u").agg(F.min("v").alias("cluster_id"))
+        raise RuntimeError("cluster_pairs: no star forest after 64 rounds")
     return df.select(F.col(key)).join(
-        roots.withColumnRenamed("u", key), on=key, how="left"
+        e.select(F.col("u").alias(key), F.col("v").alias("cluster_id")),
+        on=key, how="left",
     ).select(key, F.coalesce("cluster_id", F.col(key)).alias("cluster_id"))
 
 

@@ -13,7 +13,7 @@ Two operators the reference's point workflows imply but never generalize:
 * `density_cluster` — DBSCAN-flavored clustering at table scale: bucket
   points into lattice cells, keep cells with >= min_pts points (the "core"
   cells), connect 8-adjacent dense cells into components (reusing the
-  dedup engine's `cluster_pairs` — min-label or large/small-star), and
+  dedup engine's `cluster_pairs`, large-star/small-star contraction), and
   label every point by its cell's component.  Points in sparse cells are
   noise (NULL cluster).  All shuffles key on cell ids; the component step
   touches only the DENSE CELL list (orders of magnitude smaller than the
@@ -83,7 +83,6 @@ def density_cluster(
     lon: str = "lon",
     lat: str = "lat",
     point_id: str = "point_id",
-    algorithm: str = "label",
 ) -> DataFrame:
     """Grid-density clustering (DBSCAN-lite). Output: every point with its
     ``cell`` and ``cluster_id`` (smallest cell id in its dense component;
@@ -98,7 +97,7 @@ def density_cluster(
     # dense cell and semi-join the neighbor back against the dense set. The
     # dense list is small (<= points/min_pts rows), so both sides broadcast
     # naturally; dedup of (a,b)/(b,a) is unnecessary — cluster_pairs
-    # symmetrizes edges itself.
+    # orients and dedups edges itself.
     nbr = dense.select(
         F.col("cell").alias("id_a"),
         F.explode(cells.ring_shell(F.col("cell"), 1)).alias("id_b"),
@@ -106,9 +105,7 @@ def density_cluster(
     edges = nbr.join(
         dense.select(F.col("cell").alias("id_b")), on="id_b", how="inner"
     )
-    comp = cluster_pairs(
-        dense.select(F.col("cell")), edges, key="cell", algorithm=algorithm
-    )
+    comp = cluster_pairs(dense.select(F.col("cell")), edges, key="cell")
     return pts.join(
         comp.select("cell", "cluster_id"), on="cell", how="left"
     ).select(point_id, "cell", "cluster_id")
@@ -119,7 +116,7 @@ def sql_density_cluster(points_sql: str, res: float, min_pts: int,
                         point_id: str = "point_id") -> str:
     """DuckDB mirror: identical cell arithmetic, dense-cell filter, and a
     recursive-CTE transitive closure over the 8-adjacency graph (min
-    reachable cell id == the engine's min-label fixpoint)."""
+    reachable cell id == the engine's connected-component label)."""
     cid = cells.sql_cell_id(lon, lat, res)
     return f"""
     WITH RECURSIVE pts AS ({points_sql}),

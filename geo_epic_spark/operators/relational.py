@@ -128,15 +128,6 @@ def opc_append(
     return out
 
 
-def resume_filter(work: DataFrame, done: DataFrame, key: str | list[str]) -> DataFrame:
-    """Skip-existing resume: drop work rows whose key already appears in the
-    done-manifest (`sites/generate.py:97-98`, `soil/ssurgo_gdb.py:129-130`,
-    `core/workspace.py:331-336`) — a left_anti join, the distributed version
-    of the reference's isin-on-listdir."""
-    keys = [key] if isinstance(key, str) else key
-    return work.join(done.select(*keys).distinct(), on=keys, how="left_anti")
-
-
 def merge_upsert(
     base: DataFrame,
     updates: DataFrame,

@@ -8,8 +8,10 @@ records (partition_id, rows_in, rows_out, checksum, run_id, ts); pending work
 is ``all_partitions LEFT ANTI manifest``; output is written partitioned by the
 key so re-runs are idempotent per-partition overwrites.
 
-At cluster scale the same manifest lives next to the Iceberg table and the
-anti-join is a metadata-sized broadcast.
+At cluster scale the same manifest lives next to the Iceberg table. The
+anti-join itself is metadata-sized (one row per partition), but the joins
+around it are not: the pending keys are joined back against the whole work
+table and against the whole re-read output.
 """
 
 from __future__ import annotations
@@ -126,17 +128,21 @@ def run_with_resume(
         # order-insensitive content checksum; xor avoids int64 sum overflow
         F.bit_xor(F.xxhash64(*[c for c in written.columns if c != part_col])).alias("checksum"),
     )
+    # at most one row per pending partition: collect once, so the write and
+    # the rows_out total do not each re-run the joins above
     manifest = (
         in_counts.join(out_stats, on="partition_id", how="left")
         .na.fill({"rows_out": 0, "checksum": 0})
         .withColumn("run_id", F.lit(run_id))
+        .collect()
     )
-    manifest.write.mode("append").parquet(manifest_path)
-    rows_out = manifest.agg(F.sum("rows_out")).collect()[0][0] or 0
+    spark.createDataFrame(manifest, MANIFEST_SCHEMA).write.mode("append").parquet(
+        manifest_path
+    )
     return {
         "run_id": run_id,
         "partitions": n_pending,
-        "rows_out": int(rows_out),
+        "rows_out": sum(r["rows_out"] for r in manifest),
         "observed": observed,
     }
 

@@ -269,63 +269,33 @@ def test_cluster_pairs_components(spark):
     assert sorted(canon) == [0, 5, 6, 9, 10]
 
 
-def test_cluster_pairs_star_matches_label_on_chain(spark):
-    """algorithm='star' (large-star/small-star contraction) labels a
-    14-hop chain + triangle + singleton identically to the BFS ground
-    truth; label propagation needs diameter rounds, star needs O(log n)."""
+def _chain(n):
+    return [(i, i + 1) for i in range(n - 1)]
+
+
+@pytest.mark.parametrize("n, edges, want", [
+    # 0..14 chain (diameter 14) + triangle + singletons
+    (20, _chain(15) + [(16, 17), (17, 18), (16, 18)],
+     {**{i: 0 for i in range(15)}, 15: 15, 16: 16, 17: 16, 18: 16, 19: 19}),
+    # diameter-39 chain
+    (40, _chain(40), {i: 0 for i in range(40)}),
+    # after round 1 no target is also a source, but source 3 still links
+    # to two roots: a stop test that checks only for targets that are
+    # sources would label 1, 6 and 7 as 1
+    (8, [(3, 0), (4, 3), (5, 2), (6, 1), (6, 4), (7, 1)],
+     {0: 0, 1: 0, 3: 0, 4: 0, 6: 0, 7: 0, 2: 2, 5: 2}),
+], ids=["chain14", "chain40", "two_roots"])
+def test_cluster_pairs_matches_components(spark, n, edges, want):
+    """Large-star/small-star contraction labels every node with its
+    component's minimum on long chains and on a graph whose first round
+    leaves a source linked to two roots."""
     from geo_epic_spark.operators.dedup import cluster_pairs
 
-    n = 20
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    chain = [(i, i + 1) for i in range(14)]            # 0..14 chain, diameter 14
-    extra = [(16, 17), (17, 18), (16, 18)]             # triangle
-    pairs = spark.createDataFrame(chain + extra, "id_a long, id_b long")
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {r["doc_id"]: r["cluster_id"]
-           for r in cluster_pairs(docs, pairs, algorithm="star").collect()}
-    want = {i: 0 for i in range(15)}
-    want.update({15: 15, 16: 16, 17: 16, 18: 16, 19: 19})
+           for r in cluster_pairs(docs, pairs).collect()}
     assert got == want
-
-
-def test_cluster_pairs_label_extends_budget_on_deep_chain(spark):
-    """A chain deeper than max_iter must NOT return silently-unconverged
-    labels: the loop doubles its budget (with a warning) and still lands on
-    the true component minimum (r2 advisory finding)."""
-    import warnings as w
-
-    from geo_epic_spark.operators.dedup import cluster_pairs
-
-    n = 14
-    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
-    with w.catch_warnings(record=True) as caught:
-        w.simplefilter("always")
-        got = {r["doc_id"]: r["cluster_id"]
-               for r in cluster_pairs(docs, pairs, max_iter=3).collect()}
-    assert got == {i: 0 for i in range(n)}
-    assert any("not converged" in str(c.message) for c in caught)
-
-
-def test_cluster_pairs_chain_budget(spark):
-    """r3 ADVICE (dedup.py label loop): the budget-extension path on a
-    HIGH-diameter graph — ~40 propagation rounds — must not accumulate a
-    40-join lineage for Catalyst to analyze. The per-round lazy
-    localCheckpoint keeps the plan <= 2 joins deep, so this completes in
-    round-count-linear time instead of blowing up driver analysis."""
-    import warnings as w
-
-    from geo_epic_spark.operators.dedup import cluster_pairs
-
-    n = 40  # diameter 39 chain; max_iter=5 doubles 5 -> 10 -> 20 -> 40
-    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
-    with w.catch_warnings():
-        w.simplefilter("ignore")
-        got = {r["doc_id"]: r["cluster_id"]
-               for r in cluster_pairs(docs, pairs, max_iter=5).collect()}
-    assert got == {i: 0 for i in range(n)}
 
 
 def test_cosine_topk_arrow_deterministic_ties(spark):

@@ -44,8 +44,7 @@ class TestDensityCluster:
     def labels(self, spark):
         pts = synth.images_meta_df(spark, 3000).select(
             F.col("i").alias("point_id"), "cx", "cy")
-        out = density_cluster(pts, res=0.02, min_pts=4, lon="cx", lat="cy",
-                              algorithm="star")
+        out = density_cluster(pts, res=0.02, min_pts=4, lon="cx", lat="cy")
         return out.collect()
 
     def test_every_point_labeled_once(self, labels):
@@ -64,15 +63,6 @@ class TestDensityCluster:
         assert n_top / len(hot_in) > 0.95       # a single dominant component
         bg_noise = sum(1 for r in bg if r.cluster_id is None)
         assert bg_noise / len(bg) > 0.5
-
-    def test_label_and_star_agree(self, spark):
-        pts = synth.images_meta_df(spark, 1500).select(
-            F.col("i").alias("point_id"), "cx", "cy")
-        a = density_cluster(pts, res=0.02, min_pts=5, lon="cx", lat="cy",
-                            algorithm="star")
-        b = density_cluster(pts, res=0.02, min_pts=5, lon="cx", lat="cy",
-                            algorithm="label")
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 class TestIDW:

@@ -172,18 +172,22 @@ def test_minhash_band_recall_monotone_in_bands(threshold_seed, num_hashes_pow):
     assert recall >= 0.95 or b == nh
 
 
-@given(st.integers(0, 10_000), st.integers(0, 25))
+@given(st.integers(0, 10_000), st.integers(0, 25), st.booleans())
 @settings(max_examples=10, deadline=None)
-def test_cluster_pairs_matches_bfs_oracle(spark, seed, n_edges):
-    """Connected-component labels from min-label propagation equal a
-    driver-side BFS closure on random graphs (including chains whose
-    diameter exceeds one propagation round)."""
+def test_cluster_pairs_matches_bfs_oracle(spark, seed, n_edges, with_path):
+    """Connected-component labels from large-star/small-star contraction
+    equal a driver-side BFS closure on random graphs. ``with_path`` adds a
+    path through a seeded permutation of all nodes: a long diameter whose
+    ids are not monotone along the path."""
     from geo_epic_spark.operators.dedup import cluster_pairs
 
     rng = np.random.Generator(np.random.PCG64(seed))
     n = 14
     edges = [(int(a), int(b)) for a, b in rng.integers(0, n, size=(n_edges, 2))
              if a != b]
+    if with_path:
+        perm = [int(x) for x in rng.permutation(n)]
+        edges += list(zip(perm, perm[1:]))
     docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(
         edges or [(0, 0)], "id_a long, id_b long"

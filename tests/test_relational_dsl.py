@@ -10,7 +10,6 @@ from geo_epic_spark.operators.relational import (
     depth_bucket_median,
     dominant_component,
     opc_append,
-    resume_filter,
     soil_projection,
 )
 
@@ -59,13 +58,6 @@ def test_depth_bucket_median(spark, comps, layers):
     merged = got.set_index(["mukey", "depth_bucket"]).join(want, rsuffix="_w")
     np.testing.assert_allclose(merged.om_r_med, merged.om_r, rtol=1e-12)
     np.testing.assert_allclose(merged.ksat_r_med, merged.ksat_r, rtol=1e-12)
-
-
-def test_resume_filter(spark):
-    work = spark.range(100).withColumnRenamed("id", "k")
-    done = spark.createDataFrame([(i,) for i in range(0, 100, 2)], "k long")
-    got = resume_filter(work, done, "k").toPandas()
-    assert sorted(got.k) == list(range(1, 100, 2))
 
 
 def test_select_dsl_range(spark):
